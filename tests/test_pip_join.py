@@ -1,5 +1,7 @@
 """PIP join plans vs brute-force numpy oracle + span invariant."""
 
+import re
+
 import numpy as np
 import pytest
 
@@ -90,17 +92,25 @@ def test_span_invariant_through_pip(spark, polys):
     assert before == after
 
 
-def test_cellcover_salted_equals_unsalted(spark, points, polys):
-    from whitebox_tools_spark.operators.pip_join import points_in_polygons_cellcover
+def _python_nodes(df) -> list[str]:
+    """Python-worker operators (pandas/Arrow UDF exchanges) in the
+    executed plan of an already-run frame."""
+    tree = df._jdf.queryExecution().executedPlan().treeString()
+    return re.findall(r"\b\w*(?:Pandas|Python|InArrow)\w*", tree)
 
-    base = {(r["record_num"], r["polygon_id"])
-            for r in points_in_polygons_cellcover(points, polys, 50.0).collect()}
-    salted = {(r["record_num"], r["polygon_id"])
-              for r in points_in_polygons_cellcover(points, polys, 50.0, salt=4).collect()}
+
+def test_cellcover_refine_runs_in_jvm(spark, points, polys):
+    from whitebox_tools_spark.operators.pip_join import clip_points_cellcover
+
+    tagged = points_in_polygons_cellcover(points, polys, 50.0)
+    base = {(r["record_num"], r["polygon_id"]) for r in tagged.collect()}
     ref = {(r["record_num"], r["polygon_id"])
            for r in points_in_polygons(points, polys).collect()}
     assert base == ref
-    assert salted == ref
+    clipped = clip_points_cellcover(points, polys, 50.0, key=["record_num"])
+    clipped.collect()
+    for df in (tagged, clipped):
+        assert _python_nodes(df) == []
 
 
 def test_auto_dispatch_over_cap_layer(spark, points, polys, monkeypatch):

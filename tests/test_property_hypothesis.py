@@ -1,8 +1,8 @@
 """Property-based gates (hypothesis) for semantics that have cheap
 independent references: the strict-order fold kernels, the ExactSubstr
-island merge, and the deterministic sharder. Spark-backed properties
-cap max_examples to keep the suite fast; the numpy-kernel properties
-run at full default width."""
+island merge, the deterministic sharder and the cell-cover PIP join.
+Spark-backed properties cap max_examples to keep the suite fast; the
+numpy-kernel properties run at full default width."""
 
 import numpy as np
 from hypothesis import HealthCheck, given, settings
@@ -257,3 +257,43 @@ def test_bm25_topk_matches_reference(spark, texts, k):
             key=lambda x: (-round(x[0], 6), x[1]))
         want += [(t, rk, i) for rk, (_s, i) in enumerate(scored[:k], start=1)]
     assert out == sorted(want)
+
+
+# rings on a 0.5 lattice, so the lattice points below land exactly on
+# vertices, on edges and on bbox sides (the boundary-outside cases)
+_half = st.integers(min_value=0, max_value=16).map(lambda v: v / 2.0)
+_ring = st.lists(st.tuples(_half, _half), min_size=3, max_size=7).map(
+    lambda vs: vs + [vs[0]])
+_layer = st.lists(st.tuples(st.lists(_ring, min_size=1, max_size=2),
+                            st.lists(_ring, min_size=0, max_size=2)),
+                  min_size=1, max_size=3)
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_layer, st.sampled_from([0.5, 1.5, 4.0]))
+def test_cellcover_pip_matches_numpy_and_codegen(spark, layer, radius):
+    from whitebox_tools_spark.functions import geometry as G
+    from whitebox_tools_spark.operators import pip_join as PJ
+    from whitebox_tools_spark.sources.fixtures import polygons_df
+
+    polygons = polygons_df(spark, [
+        {"polygon_id": pid, "name": str(pid),
+         "parts": [{"is_hole": False, "ring": r} for r in shells]
+         + [{"is_hole": True, "ring": r} for r in holes]}
+        for pid, (shells, holes) in enumerate(layer, start=1)])
+    grid = np.arange(-1, 18) / 2.0
+    px, py = (a.ravel() for a in np.meshgrid(grid, grid))
+    points = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(px, py))],
+        "record_num long, x double, y double")
+    want = set()
+    for rec in PJ.collect_polygons(polygons):
+        mask = G.points_in_feature(px, py, rec.shells, rec.holes, rec.bbox)
+        want |= {(int(i), rec.polygon_id) for i in np.nonzero(mask)[0]}
+    cover = {(r.record_num, r.polygon_id) for r in
+             PJ.points_in_polygons_cellcover(points, polygons, radius).collect()}
+    codegen = {(r.record_num, r.polygon_id) for r in
+               PJ.points_in_polygons(points, polygons, plan="codegen").collect()}
+    assert cover == want
+    assert codegen == want

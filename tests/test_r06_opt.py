@@ -11,6 +11,7 @@ keep results identical, and the new safety knobs must actually bind.
 - transcode driver-egress cap raises past MAX_DRIVER_POINTS
   (r05 verdict ask #3).
 - _emb_doubled emits exactly the unionByName rows.
+- spread_narrow_scan sizes percent-encoded file: URIs.
 """
 
 import pytest
@@ -122,3 +123,18 @@ def test_emb_doubled_equals_union(spark):
     got["embedding"] = got["embedding"].map(tuple)
     ref["embedding"] = ref["embedding"].map(tuple)
     assert got.equals(ref)
+
+
+def test_spread_decodes_file_uri(spark, tmp_path):
+    """inputFiles() returns percent-encoded file: URIs; a local scan in
+    a directory whose name holds a space must still be sized and
+    spread."""
+    from whitebox_tools_spark.plans.spread import spread_narrow_scan
+
+    path = str(tmp_path / "with space" / "pts.parquet")
+    spark.range(10).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert any("%20" in f for f in df.inputFiles())
+    out = spread_narrow_scan(df, parallelism=4)
+    assert "Repartition" in out._jdf.queryExecution().logical().toString()
+    assert sorted(r.id for r in out.collect()) == list(range(10))

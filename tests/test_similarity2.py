@@ -274,3 +274,13 @@ class TestSemDedup:
             best = min(members, key=lambda r: (r["cent_sim"], r["vec_id"]))
             for r in members:
                 assert r["is_kept"] == (1 if r is best else 0)
+
+
+def test_ivfpq_rejects_duplicate_query_ids(spark, emb):
+    """The query vectors are broadcast as a dict keyed by query id, so a
+    repeated id would silently keep one vector: it must raise."""
+    q = emb.where("vec_id % 10 = 0")
+    dup = q.unionByName(q.limit(1))
+    with pytest.raises(ValueError, match="unique"):
+        S.ann_topk_ivfpq(dup, emb, k=5, num_centroids=8, n_probe=3, m=4,
+                         n_codes=8, shortlist=20)

@@ -9,7 +9,10 @@ thread scaling (the mapInArrow kernel saturates the JVM<->Python pipe at
 
 The emitted SQL is engine-portable (CASE/AND/OR/%), so the exact same
 generator builds the DuckDB oracle — operator and oracle share one
-source of truth for the arithmetic.
+source of truth for the arithmetic. The cell-cover plan's refine uses
+the same per-edge term (`_crossing_sql`) with the edge constants read
+from per-polygon edge-array columns instead of folded in
+(`ring_edges_sql`, `inside_any_ring_sql`; Spark dialect).
 
 Parity: the term order and operations replicate the numpy kernel
 (functions/geometry.py) which replicates poly_ops.rs:21-72 —
@@ -32,15 +35,46 @@ def winding_sql(ring: Ring, xs: str = "x", ys: str = "y") -> str:
     checked integer adds (one per edge per row) measurably slow the
     whole-stage-codegen loop on short spatial queries (~10 % on the
     broadcast PIP predicate at sf0.1)."""
-    terms = []
-    for (x0, y0), (x1, y1) in zip(ring[:-1], ring[1:]):
-        il = (f"(({(x1 - x0)!r}) * (({ys}) - ({y0!r})) - "
-              f"((({xs}) - ({x0!r})) * ({(y1 - y0)!r})))")
-        terms.append(
-            f"(CASE WHEN ({y0!r}) <= ({ys}) AND ({y1!r}) > ({ys}) AND {il} > 0.0 THEN 1.0 "
-            f"WHEN ({y0!r}) > ({ys}) AND ({y1!r}) <= ({ys}) AND {il} < 0.0 THEN -1.0 ELSE 0.0 END)"
-        )
+    terms = [
+        _crossing_sql(repr(x0), repr(y0), repr(y1), repr(x1 - x0), repr(y1 - y0), xs, ys)
+        for (x0, y0), (x1, y1) in zip(ring[:-1], ring[1:])
+    ]
     return "(" + " + ".join(terms) + ")"
+
+
+def _crossing_sql(x0: str, y0: str, y1: str, dx: str, dy: str,
+                  xs: str, ys: str) -> str:
+    """One edge's signed crossing (+1.0 / -1.0 / 0.0). Operands are SQL
+    expressions — folded literals for a broadcast layer, struct fields
+    for the cell-cover refine; dx = x1-x0, dy = y1-y0."""
+    il = f"(({dx}) * (({ys}) - ({y0})) - ((({xs}) - ({x0})) * ({dy})))"
+    return (f"(CASE WHEN ({y0}) <= ({ys}) AND ({y1}) > ({ys}) AND {il} > 0.0 THEN 1.0 "
+            f"WHEN ({y0}) > ({ys}) AND ({y1}) <= ({ys}) AND {il} < 0.0 THEN -1.0 ELSE 0.0 END)")
+
+
+def ring_edges_sql(parts: str, holes: bool) -> str:
+    """Per-row edge arrays for the shell (holes=False) or hole rings of
+    a `parts` column: ARRAY<ARRAY<STRUCT<x0, y0, y1, dx, dy>>>, one
+    inner array per ring, edge i joining vertex i to vertex i+1 (the
+    ring is closed, first == last). dx, dy are computed here once per
+    edge, as winding_sql folds them at plan time. Empty rings give no
+    edges (the GREATEST guard keeps SLICE's length non-negative)."""
+    n = "GREATEST(SIZE(__p.ring) - 1, 0)"
+    return (
+        f"TRANSFORM(FILTER({parts}, __p -> {'' if holes else 'NOT '}__p.is_hole), "
+        f"__p -> ZIP_WITH(SLICE(__p.ring, 1, {n}), SLICE(__p.ring, 2, {n}), "
+        f"(__a, __b) -> STRUCT(__a.x AS x0, __a.y AS y0, __b.y AS y1, "
+        f"__b.x - __a.x AS dx, __b.y - __a.y AS dy)))"
+    )
+
+
+def inside_any_ring_sql(rings: str, xs: str = "x", ys: str = "y") -> str:
+    """Even-odd containment in any ring of a ring_edges_sql column: the
+    winding_sql sum as an AGGREGATE over the edge structs (same terms,
+    same order, accumulated in DOUBLE)."""
+    term = _crossing_sql("__e.x0", "__e.y0", "__e.y1", "__e.dx", "__e.dy", xs, ys)
+    return (f"EXISTS({rings}, __r -> AGGREGATE(__r, CAST(0 AS DOUBLE), "
+            f"(__w, __e) -> __w + {term}) % 2.0 <> 0.0)")
 
 
 def inside_ring_sql(ring: Ring, xs: str = "x", ys: str = "y") -> str:

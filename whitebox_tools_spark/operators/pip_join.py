@@ -16,12 +16,14 @@ Two physical plans:
    stream. Zero shuffle: the job is scan -> batched numpy PIP -> write.
 
 2. **Cell-cover plan** (large polygon layer): each polygon emits the FRS
-   cells covered by its bbox (explode(sequence(...)) x2 — codegen), the
-   points carry their own cell key, and an equi-join on cell id produces
-   candidate pairs; a numpy PIP refine follows. The join is a plain
-   shuffle hash/sort-merge join on int64 cells — AQE handles skewed
-   (hot) cells; `functions.cells.cell_prefix_salt` is available when a
-   single cell exceeds a task.
+   cells covered by its bbox (explode(sequence(...)) x2 — codegen),
+   carrying its bbox and its ring edges as arrays; the points carry
+   their own cell key, and an equi-join on cell id produces candidate
+   pairs. The even-odd refine is a SQL filter over the carried edge
+   arrays in the join's own stage — no Python worker, no second
+   exchange. The join is a plain equi-join on int64 cells — AQE
+   handles skewed (hot) cells; `functions.cells.cell_prefix_salt` is
+   available when a single cell exceeds a task.
 
 Both plans preserve the input row payload untouched (span-sequence
 invariant): they only append `polygon_id` / keep-or-drop rows.
@@ -32,7 +34,6 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
@@ -203,7 +204,7 @@ def clip_points_cellcover(
     """Clip/erase against an arbitrarily-large polygon layer: cell-cover
     tag join -> semi (clip) / anti (erase) join back on `key` (a unique
     row identifier — required because a point inside overlapping
-    polygons matches several cogroups and the fold back to one verdict
+    polygons yields several tagged rows and the fold back to one verdict
     per row needs a join key; the broadcast plan folds per-row state
     instead and needs none)."""
     tagged = points_in_polygons_cellcover(
@@ -292,17 +293,17 @@ def _points_in_polygons_arrow(points: DataFrame, recs: list, x: str, y: str) -> 
 
 
 def polygon_cover_cells(polygons: DataFrame, radius: float) -> DataFrame:
-    """(cell cx, cy, polygon_id) for every FRS cell intersecting each
-    polygon's bbox. Pure codegen: sequence + explode, no UDF."""
+    """Each row (which must carry `bbox`) once per FRS cell (cx, cy)
+    intersecting its bbox, all its columns kept. Pure codegen: sequence
+    + explode, no UDF."""
     cxmin = frs_cell_expr("bbox.xmin", radius)
     cxmax = frs_cell_expr("bbox.xmax", radius)
     cymin = frs_cell_expr("bbox.ymin", radius)
     cymax = frs_cell_expr("bbox.ymax", radius)
     return (
-        polygons.select("polygon_id", "bbox")
+        polygons
         .withColumn("cx", F.explode(F.expr(f"SEQUENCE({cxmin}, {cxmax})")))
         .withColumn("cy", F.explode(F.expr(f"SEQUENCE({cymin}, {cymax})")))
-        .select("polygon_id", "cx", "cy")
     )
 
 
@@ -326,80 +327,37 @@ def points_in_polygons_cellcover(
     radius: float,
     x: str = "x",
     y: str = "y",
-    salt: int = 1,
 ) -> DataFrame:
-    """Tag-join via cell-cover equi-join + cogrouped PIP refine.
+    """Tag-join via cell-cover equi-join + in-stage SQL PIP refine.
 
     Plan (fully distributed — NOTHING is collected to the driver, so the
     polygon layer can be arbitrarily large):
 
     1. points gain (cx, cy) [codegen];
-    2. equi-join against the polygon cover-cell table on (cx, cy)
-       [one shuffle; AQE skew-split], with each cover row carrying its
-       polygon's bbox so the strict-interior bbox prefilter
-       (bounding_box.rs:217) runs inside the same codegen stage;
-    3. the surviving candidate pairs COGROUP with the flattened ring
-       vertices (`polygon_vertices`) on polygon_id; the numpy even-odd
-       kernel (poly_ops.rs:30-72 semantics) refines each group.
+    2. each polygon row builds its shell and hole edge arrays once
+       (`GS.ring_edges_sql`) and explodes its bbox into cover cells that
+       carry bbox + edges;
+    3. equi-join on (cx, cy) [one shuffle or broadcast; AQE skew-split],
+       then, in the join's stage, the strict-interior bbox prefilter
+       (bounding_box.rs:217) and the even-odd refine: inside any shell
+       AND NOT inside any hole (poly_ops.rs:30-72 semantics, the
+       winding_sql terms evaluated over the edge arrays).
 
-    `salt` > 1 splits a hot polygon's candidates across that many tasks
-    (candidates hash-salted, vertices replicated per salt) — use when a
-    single polygon's candidate set exceeds one task's memory at scale.
+    No Python worker runs: the refine is the broadcast codegen plan's
+    arithmetic with the edge constants read from columns.
     """
-    pts = with_frs_cells(points, radius, x=x, y=y)
-    # cover cells with the bbox carried inline (same explode plan as
-    # polygon_cover_cells; carrying bbox here avoids a self-join on the
-    # polygon layer)
-    cxmin = frs_cell_expr("bbox.xmin", radius)
-    cxmax = frs_cell_expr("bbox.xmax", radius)
-    cymin = frs_cell_expr("bbox.ymin", radius)
-    cymax = frs_cell_expr("bbox.ymax", radius)
-    cover = (
-        polygons.select("polygon_id", "bbox")
-        .withColumn("cx", F.explode(F.expr(f"SEQUENCE({cxmin}, {cxmax})")))
-        .withColumn("cy", F.explode(F.expr(f"SEQUENCE({cymin}, {cymax})")))
-    )
-    cand = pts.join(cover, ["cx", "cy"], "inner")
+    cover = polygon_cover_cells(polygons.selectExpr(
+        "CAST(polygon_id AS BIGINT) AS polygon_id", "bbox",
+        f"{GS.ring_edges_sql('parts', holes=False)} AS __shells",
+        f"{GS.ring_edges_sql('parts', holes=True)} AS __holes"), radius)
+    cand = with_frs_cells(points, radius, x=x, y=y).join(cover, ["cx", "cy"], "inner")
     # bbox prefilter: strict interior (bounding_box.rs:217)
     cand = cand.where(
         (F.col(x) > F.col("bbox.xmin"))
         & (F.col(x) < F.col("bbox.xmax"))
         & (F.col(y) > F.col("bbox.ymin"))
         & (F.col(y) < F.col("bbox.ymax"))
-    ).drop("cx", "cy", "bbox")
-
-    out_fields = [f for f in points.schema.fields] + [StructField("polygon_id", LongType(), False)]
-    schema = StructType(out_fields)
-    point_cols = [f.name for f in points.schema.fields]
-    # the vertex side renames its key: cand and verts share the polygon
-    # layer as a common ancestor and Spark's ambiguous-self-join check
-    # rejects two same-named keys from one lineage
-    verts = polygon_vertices(polygons).withColumnRenamed("polygon_id", "__vpid")
-
-    keys, vkeys = ["polygon_id"], ["__vpid"]
-    if salt > 1:
-        cand = cand.withColumn(
-            "__salt", F.expr(f"PMOD(HASH({x}, {y}), {int(salt)})"))
-        verts = verts.withColumn(
-            "__salt", F.explode(F.expr(f"SEQUENCE(0, {int(salt) - 1})")))
-        keys, vkeys = ["polygon_id", "__salt"], ["__vpid", "__salt"]
-
-    def refine(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(columns=point_cols + ["polygon_id"])
-        right = right.sort_values(["part_idx", "vtx_idx"], kind="mergesort")
-        shells, holes = [], []
-        for (_pi, ih), g in right.groupby(["part_idx", "is_hole"], sort=True):
-            ring = np.column_stack(
-                [g["vx"].to_numpy(np.float64), g["vy"].to_numpy(np.float64)])
-            (holes if ih else shells).append(ring)
-        px = left[x].to_numpy(dtype=np.float64)
-        py = left[y].to_numpy(dtype=np.float64)
-        m = G.points_in_feature(px, py, shells, holes)
-        return left.loc[m, point_cols + ["polygon_id"]]
-
-    return (
-        cand.groupBy(*keys)
-        .cogroup(verts.groupBy(*vkeys))
-        .applyInPandas(refine, schema=schema)
     )
+    inside = (f"{GS.inside_any_ring_sql('__shells', x, y)} AND NOT "
+              f"{GS.inside_any_ring_sql('__holes', x, y)}")
+    return cand.where(F.expr(inside)).select(*points.columns, "polygon_id")

@@ -711,13 +711,18 @@ def ann_topk_ivfpq(
                         F.col(vec_col).alias("queryv"))
     try:
         qids_arr, qmat_arr = _collect_matrix(qv, "query_id", "queryv")
-        qvec_bc = spark.sparkContext.broadcast(
-            {int(i): qmat_arr[j] for j, i in enumerate(qids_arr)})
     except ValueError:
         # query side past the driver-collect cap: fall back to attaching
         # the query vector by join (the pre-r06 plan — more Arrow bytes
         # per candidate, but no driver bound); same arithmetic.
         qvec_bc = None
+    else:
+        # the broadcast dict is keyed by query id: a repeated id would
+        # silently keep only its last vector
+        if len(np.unique(qids_arr)) != len(qids_arr):
+            raise ValueError(f"ann_topk_ivfpq: query {id_col} values must be unique")
+        qvec_bc = spark.sparkContext.broadcast(
+            {int(i): qmat_arr[j] for j, i in enumerate(qids_arr)})
     cand = (
         q_assign.join(lists, "centroid")
         .where(F.col("query_id") != F.col("target_id"))

@@ -18,6 +18,7 @@ listing only (driver-side, no jobs):
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 
@@ -45,11 +46,11 @@ def spread_narrow_scan(df: DataFrame, parallelism: int | None = None) -> DataFra
         return df
     total = 0
     for f in files:
-        if not f.startswith("file:"):
+        uri = urlparse(f)
+        if uri.scheme != "file":
             return df
-        p = "/" + f[5:].lstrip("/")
         try:
-            total += os.path.getsize(p)
+            total += os.path.getsize(unquote(uri.path))
         except OSError:
             return df
     if total < _NARROW_SCAN_BYTES:
