@@ -49,6 +49,8 @@ from whitebox_tools_spark.operators import raster as R
 from whitebox_tools_spark.operators import retrieval as RV
 from whitebox_tools_spark.operators import similarity as S
 from whitebox_tools_spark.operators import tiling as TL
+from whitebox_tools_spark.plans.driver import local_frame
+from whitebox_tools_spark.sources.fixtures import polygon_rows
 
 # ---------------------------------------------------------------------------
 # Derived layers (portable SQL — identical text runs on Spark and DuckDB)
@@ -198,17 +200,11 @@ _POLY_SCHEMA = StructType([
 
 
 def _polygons_df(spark: SparkSession) -> DataFrame:
-    rows = []
-    for pid, shells, holes in _POLYS:
-        xs = [p[0] for ring in shells + holes for p in ring]
-        ys = [p[1] for ring in shells + holes for p in ring]
-        parts, idx = [], 0
-        for is_hole, rings in ((False, shells), (True, holes)):
-            for ring in rings:
-                parts.append((idx, is_hole, [{"x": x, "y": y} for x, y in ring]))
-                idx += 1
-        rows.append((pid, {"xmin": min(xs), "ymin": min(ys), "xmax": max(xs), "ymax": max(ys)}, parts))
-    return spark.createDataFrame(rows, schema=_POLY_SCHEMA)
+    polys = [{"polygon_id": pid,
+              "parts": [{"is_hole": False, "ring": r} for r in shells]
+              + [{"is_hole": True, "ring": r} for r in holes]}
+             for pid, shells, holes in _POLYS]
+    return local_frame(spark, polygon_rows(polys), _POLY_SCHEMA)
 
 
 # -- PIP oracle SQL comes from the SAME generator the codegen operator

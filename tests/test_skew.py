@@ -1,8 +1,8 @@
-"""Hot-tile skew handling: salted repartition bounds task sizes."""
+"""Hot-tile skew handling: the rebalanced tile write bounds task sizes."""
 
 import pyspark.sql.functions as F
 
-from whitebox_tools_spark.operators.tiling import salted_repartition, write_tiles
+from whitebox_tools_spark.operators.tiling import write_tiles
 
 
 def _skewed_points(spark, n=100_000):
@@ -17,35 +17,35 @@ def _skewed_points(spark, n=100_000):
     ).withColumn("tile_id", F.expr("CAST(FLOOR(y / 100.0) AS BIGINT) * 10 + CAST(FLOOR(x / 100.0) AS BIGINT)"))
 
 
-def test_salted_repartition_balances_hot_tile(spark):
-    pts = _skewed_points(spark)
-    n = pts.count()
-
-    unsalted = pts.repartition(32, F.col("tile_id"))
-    u_sizes = [r["c"] for r in unsalted.groupBy(F.spark_partition_id().alias("p"))
-               .agg(F.count(F.lit(1)).alias("c")).collect()]
-    salted = salted_repartition(pts, "tile_id", salt_buckets=16, num_partitions=32)
-    s_sizes = [r["c"] for r in salted.groupBy(F.spark_partition_id().alias("p"))
-               .agg(F.count(F.lit(1)).alias("c")).collect()]
-
-    assert max(u_sizes) >= 0.8 * n, "fixture must actually be skewed"
-    # the hot tile spreads over ~16 tasks: max partition bounded
-    assert max(s_sizes) <= 0.15 * n, (max(s_sizes), n)
-    # no rows lost
-    assert sum(s_sizes) == n
-
-
 def test_write_tiles_layout_and_content(spark, tmp_path):
     pts = _skewed_points(spark, 20_000)
     out = str(tmp_path / "tiles")
-    write_tiles(pts, out, salt_buckets=8, num_partitions=32)
+    # A small advisory size makes AQE split the hot tile (~16k rows)
+    # and nothing else. Skew splits cut a shuffle partition along map
+    # outputs, so a cold tile hashed into the hot tile's partition would
+    # be cut with it: 200 partitions leave the hot tile alone in its own.
+    conf = {"spark.sql.adaptive.advisoryPartitionSizeInBytes": "64k",
+            "spark.sql.shuffle.partitions": "200"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    buckets = {r["tile_id"]: r["b"] for r in pts.select("tile_id").distinct()
+               .withColumn("b", F.expr("PMOD(HASH(tile_id), 200)")).collect()}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        write_tiles(pts, out)
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     back = spark.read.parquet(out)
     assert back.count() == 20_000
     got = {r["tile_id"]: r["c"] for r in back.groupBy("tile_id").agg(F.count(F.lit(1)).alias("c")).collect()}
     want = {r["tile_id"]: r["c"] for r in pts.groupBy("tile_id").agg(F.count(F.lit(1)).alias("c")).collect()}
     assert got == want
-    # the hot tile directory holds multiple (salted) files
     import glob
     hot = max(want, key=want.get)
-    files = glob.glob(f"{out}/tile_id={hot}/*.parquet")
-    assert len(files) > 1
+    assert [t for t, b in buckets.items() if b == buckets[hot]] == [hot]
+    # the hot tile directory holds multiple (split) files
+    assert len(glob.glob(f"{out}/tile_id={hot}/*.parquet")) > 1
+    # every cold tile is written by one task
+    cold = {t: len(glob.glob(f"{out}/tile_id={t}/*.parquet")) for t in want if t != hot}
+    assert set(cold.values()) == {1}, cold

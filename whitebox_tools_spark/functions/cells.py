@@ -12,8 +12,7 @@ Two key systems live here:
 2. **Morton (Z-order) packed cell ids** — the "H3/S2-style" hierarchical
    int64 cell id required by the north rule: bits of (cx, cy) are
    interleaved so that the id of a parent cell at a coarser resolution
-   is a *prefix* (``cell_id >> 2*k``). Prefix-based repartitioning and
-   salting defuse hot-tile skew at 10^12-doc scale.
+   is a *prefix* (``cell_id >> 2*k``).
 
 All of this is pure column-expression SQL (whole-stage codegen, no
 Python), generated as expression *strings* so the exact same arithmetic
@@ -96,18 +95,6 @@ def parent_cell(cell_id: Column | str, levels_up: int) -> Column:
     """Coarser-resolution ancestor: drop 2 bits per level (prefix property)."""
     c = F.col(cell_id) if isinstance(cell_id, str) else cell_id
     return F.shiftright(c, 2 * levels_up)
-
-
-def cell_prefix_salt(cell_id: Column | str, prefix_levels: int, salt_buckets: int) -> Column:
-    """Salted repartition key for hot tiles: coarse prefix * B + salt.
-
-    Rows in the same coarse cell spread over `salt_buckets` shuffle
-    partitions; joins that only need cell-local data add the same salt on
-    the build side (or broadcast). This is the skew lever for 10^12-doc
-    hot cells (urban clusters).
-    """
-    p = parent_cell(cell_id, prefix_levels)
-    return p * salt_buckets + (F.spark_partition_id() % salt_buckets)
 
 
 def with_cell_id(

@@ -31,6 +31,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StructField,
                                StructType)
 
 from ..functions.raster_math import GridMeta
+from ..plans.driver import local_frame
 
 _SEG_SCHEMA = StructType([
     StructField("level", DoubleType(), False),
@@ -77,7 +78,7 @@ def contour_segments(cells: DataFrame, meta: GridMeta, base: float,
     k1 = int(math.floor((zmax - base) / interval))
     levels = [base + k * interval for k in range(k0, k1 + 1)]
     if not levels:
-        return cells.sparkSession.createDataFrame([], _SEG_SCHEMA)
+        return local_frame(cells.sparkSession, [], _SEG_SCHEMA)
     west, north = meta.west, meta.north
     rx, ry = meta.resolution_x, meta.resolution_y
 

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text as T
+from ..plans.driver import local_frame
 
 # bpe_train's local-rounds dispatch threshold: vocabs at or below this
 # train on the driver (bit-identical integer/string rounds, no per-round
@@ -1254,8 +1255,8 @@ def bpe_train(
             pat, rep = f"<{a}><{b}>", f"<{a}{b}>"
             rows = [(seq.replace(pat, rep), wc) for seq, wc in rows]
         spark = docs.sparkSession
-        mdf = spark.createDataFrame(
-            merges or [],
+        mdf = local_frame(
+            spark, merges,
             "round BIGINT, left STRING, right STRING, merged STRING, "
             "pair_count BIGINT")
         return mdf, merges
@@ -1294,8 +1295,8 @@ def bpe_train(
         if r % 32 == 0:
             vocab = vocab.localCheckpoint()
     spark = docs.sparkSession
-    mdf = spark.createDataFrame(
-        merges or [],
+    mdf = local_frame(
+        spark, merges,
         "round BIGINT, left STRING, right STRING, merged STRING, "
         "pair_count BIGINT")
     return mdf, merges

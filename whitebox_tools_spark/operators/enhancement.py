@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.driver import local_frame
 from ..plans.rank import ordered_prefix_sums
 
 
@@ -452,8 +453,8 @@ def gaussian_contrast_stretch(cells: DataFrame,
     withp = (b.join(cdf.select("__bin", "__cum___c"), "__bin")
              .selectExpr("row", "col",
                          "CAST(__cum___c AS DOUBLE) / CAST(__n AS DOUBLE) AS __p"))
-    ref = spark.createDataFrame(
-        gaussian_ref_cdf(num_tones),
+    ref = local_frame(
+        spark, gaussian_ref_cdf(num_tones),
         "i int, x double, p double, x_prev double, p_prev double")
     pmap = (withp.select("__p").distinct()
             .join(F.broadcast(ref), F.col("p") > F.col("__p"), "left")

@@ -21,9 +21,8 @@ Two physical plans:
    their own cell key, and an equi-join on cell id produces candidate
    pairs. The even-odd refine is a SQL filter over the carried edge
    arrays in the join's own stage — no Python worker, no second
-   exchange. The join is a plain equi-join on int64 cells — AQE
-   handles skewed (hot) cells; `functions.cells.cell_prefix_salt` is
-   available when a single cell exceeds a task.
+   exchange. The join is a plain equi-join on int64 cells, so AQE's
+   skew-join split handles hot cells.
 
 Both plans preserve the input row payload untouched (span-sequence
 invariant): they only append `polygon_id` / keep-or-drop rows.

@@ -44,6 +44,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions import geometry as G
 from ..functions.raster_math import GridMeta
+from ..plans.driver import local_frame
 
 # ---------------------------------------------------------------------------
 # Vector -> raster
@@ -607,8 +608,8 @@ def kappa_index(a: DataFrame, b: DataFrame) -> DataFrame:
         if po is not None and pe is not None and pe != 1.0
         else None
     )
-    return spark.createDataFrame(
-        [(n, po, pe, kappa)],
+    return local_frame(
+        spark, [(n, po, pe, kappa)],
         "n bigint, p_observed double, p_expected double, kappa double",
     )
 

@@ -12,9 +12,9 @@
 
 Scale notes: tile/hex assignment is a pure per-row column expression
 (codegen, zero shuffle). The only shuffles are the explicit
-``groupBy(tile_id)`` count and the partitioned write. At 10^12 docs the
-write is `.repartition(cell_prefix)` + partitionBy(tile bucket) so one
-hot tile never lands in a single task (salting in functions.cells).
+``groupBy(tile_id)`` count and the partitioned write. The write
+rebalances on the tile column, and AQE splits a hot tile over several
+tasks by size, so one hot tile never lands in a single task.
 """
 
 from __future__ import annotations
@@ -129,48 +129,19 @@ def filter_min_points(tiled: DataFrame, min_points: int, tile_col: str = "tile_i
     )
 
 
-def write_tiles(
-    tiled: DataFrame,
-    path: str,
-    tile_col: str = "tile_id",
-    salt_buckets: int = 16,
-    salt_cols: tuple[str, str] = ("x", "y"),
-    mode: str = "overwrite",
-    num_partitions: int | None = None,
-) -> None:
-    """Partitioned tile write with salted repartitioning — the north
-    rule's hot-tile skew defuser.
+def write_tiles(tiled: DataFrame, path: str, tile_col: str = "tile_id",
+                mode: str = "overwrite") -> None:
+    """Partitioned tile write — the north rule's hot-tile skew defuser.
 
-    A naive repartition(tile_id) sends EVERY row of a hot tile (urban
-    cluster) to one task; salting by a row-content hash spreads each
-    tile over up to `salt_buckets` tasks, each writing its own file into
-    the tile's directory. Readers see identical data (partitionBy keeps
-    the directory layout); writers see bounded task sizes. AQE cannot do
-    this for writes (skew-split applies to joins/aggs), so the salt is
-    explicit here.
+    A rebalance on the tile column gives each tile to one task, so each
+    tile directory holds one file. AQE's rebalance skew-split
+    (`OptimizeSkewInRebalancePartitions`) cuts any tile larger than
+    `spark.sql.adaptive.advisoryPartitionSizeInBytes` into several
+    tasks, each writing its own file into the tile's directory, and
+    coalesces small tiles into shared tasks. Readers see the same
+    directory layout either way; writers see bounded task sizes.
     """
-    salted = salted_repartition(tiled, tile_col, salt_buckets, salt_cols, num_partitions)
-    salted.write.mode(mode).partitionBy(tile_col).parquet(path)
-
-
-def salted_repartition(
-    df: DataFrame,
-    key_col: str,
-    salt_buckets: int = 16,
-    salt_cols: tuple[str, ...] = ("x", "y"),
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Spread each key group over up to salt_buckets partitions (for
-    downstream per-partition work that doesn't need key-locality).
-    num_partitions pins the exchange width (an explicit width opts out
-    of AQE coalescing — use when the downstream is write- or
-    task-latency-bound rather than size-bound)."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.hash(*[F.col(c) for c in salt_cols]), F.lit(salt_buckets))
-    )
-    keys = [F.col(key_col), F.col("__salt")]
-    out = salted.repartition(num_partitions, *keys) if num_partitions else salted.repartition(*keys)
-    return out.drop("__salt")
+    tiled.hint("rebalance", tile_col).write.mode(mode).partitionBy(tile_col).parquet(path)
 
 
 # ---------------------------------------------------------------------------

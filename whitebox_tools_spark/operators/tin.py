@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.raster_math import GridMeta
+from ..plans.driver import local_frame
 
 
 def _circumcircle(P: np.ndarray, a: int, b: int, c: int) -> tuple[float, float, float]:
@@ -501,7 +502,7 @@ def rbf_interpolation(points: DataFrame, meta: GridMeta, k: int = 20,
         F.min(value_col).alias("z"))
     sites, n_sites = global_row_number(sites, ["x", "y"], out="pid")
     if n_sites == 0:
-        return spark.createDataFrame([], "row long, col long, value double")
+        return local_frame(spark, [], "row long, col long, value double")
     ext = points.agg(F.min("x"), F.max("x"), F.min("y"), F.max("y")).collect()[0]
     area = max((ext[1] - ext[0]) * (ext[3] - ext[2]), 1.0)
     radius = wbt_default_radius(area, n_sites)
@@ -637,9 +638,9 @@ def delaunay_certified(points: DataFrame, meta: GridMeta, tile: int = 32,
     ext = points.selectExpr("MIN(x) AS x0", "MAX(x) AS x1",
                             "MIN(y) AS y0", "MAX(y) AS y1").collect()[0]
     if ext.x0 is None:  # empty point layer: no triangles
-        return spark.createDataFrame(
-            [], "ax double, ay double, az double, bx double, by double, "
-                "bz double, cx double, cy double, cz double")
+        return local_frame(
+            spark, [], "ax double, ay double, az double, bx double, by double, "
+                       "bz double, cx double, cy double, cz double")
     ex0, ex1, ey0, ey1 = float(ext.x0), float(ext.x1), float(ext.y0), float(ext.y1)
     schema = StructType([
         StructField("tx", LongType(), False), StructField("ty", LongType(), False),
@@ -812,7 +813,7 @@ def delaunay_certified(points: DataFrame, meta: GridMeta, tile: int = 32,
         if not badset:
             break
         expected = badset
-        active = spark.createDataFrame(sorted(badset), "tx long, ty long")
+        active = local_frame(spark, sorted(badset), "tx long, ty long")
         active_rects = [
             (west + (btx * tile) * resx,
              west + min((btx + 1) * tile, cols_total) * resx,

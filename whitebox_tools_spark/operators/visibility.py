@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
 from ..functions.raster_math import GridMeta
+from ..plans.driver import local_frame
 
 _OUT_SCHEMA = StructType([
     StructField("row", LongType(), False),
@@ -570,7 +571,7 @@ def horizon_angle_multi(cells: DataFrame, meta: GridMeta,
         smax_global = int(math.hypot(rows_n, cols_n)) + 2
     az_rows = [(i, -math.cos(math.radians(a)), math.sin(math.radians(a)))
                for i, a in enumerate(azimuths)]
-    az = spark.createDataFrame(az_rows, "azid int, step_r double, step_c double")
+    az = local_frame(spark, az_rows, "azid int, step_r double, step_c double")
 
     def exit_expr(pos: str, step: str, n: int) -> str:
         return (f"CASE WHEN {step} > 0.0 THEN ({n} - 0.5 - {pos}) / {step} "
@@ -668,7 +669,7 @@ def time_in_daylight(cells: DataFrame, meta: GridMeta, lat: float = 45.0,
     spark = cells.sparkSession
     sun_rows = [(int(round(az / (360.0 / n_azimuths))) % n_azimuths, alt)
                 for az, alt in sun]
-    sun_df = spark.createDataFrame(sun_rows, "azid int, alt double")
+    sun_df = local_frame(spark, sun_rows, "azid int, alt double")
     lit = (
         hors.join(F.broadcast(sun_df), "azid")
         .groupBy("row", "col")

@@ -28,6 +28,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .driver import local_frame
+
 LINEAGE_SCHEMA = (
     "run_id string, partition_key string, status string, rows bigint, "
     "seconds double, rows_per_sec double, attempt string, finished_at string"
@@ -86,9 +88,7 @@ class CheckpointedRun:
                 if fn.endswith(".json"):
                     with open(os.path.join(self.lineage_dir, fn)) as f:
                         recs.append(json.load(f))
-        return self.spark.createDataFrame(recs, schema=LINEAGE_SCHEMA) if recs else (
-            self.spark.createDataFrame([], schema=LINEAGE_SCHEMA)
-        )
+        return local_frame(self.spark, recs, LINEAGE_SCHEMA)
 
     # -- partition sink ------------------------------------------------
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .driver import local_frame
+
 
 def _ranged(df: DataFrame, order_cols: list[str], num_partitions: int | None):
     spark = df.sparkSession
@@ -49,7 +51,7 @@ def global_row_number(df: DataFrame, order_cols: list[str], out: str = "__rn",
     if not offs:
         return ranged.withColumn(out, F.lit(0).cast("long")).drop("__pid"), 0
     off_df = F.broadcast(
-        spark.createDataFrame(offs, "__pid int, __off long")
+        local_frame(spark, offs, "__pid int, __off long")
     )
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (
@@ -81,7 +83,7 @@ def ordered_prefix_sums(df: DataFrame, order_cols: list[str], sum_cols: list[str
             out = out.withColumn(f"__cum_{c}", F.col(c).cast("long"))
         return out
     off_schema = "__pid int, " + ", ".join(f"__off_{c} long" for c in sum_cols)
-    off_df = F.broadcast(spark.createDataFrame(offs, off_schema))
+    off_df = F.broadcast(local_frame(spark, offs, off_schema))
     w = Window.partitionBy("__pid").orderBy(*order_cols) \
               .rowsBetween(Window.unboundedPreceding, 0)
     out = ranged.join(off_df, "__pid")

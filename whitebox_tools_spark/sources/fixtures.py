@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..plans.driver import local_frame
+
 # ring = list[(x, y)], closed (first == last). Shells clockwise, holes
 # counter-clockwise (WBT shapefile convention, geometry.rs:307-345).
 FIXTURE_POLYGONS: list[dict] = [
@@ -87,33 +89,39 @@ def _bbox(parts: list[dict]) -> dict:
     return {"xmin": min(xs), "ymin": min(ys), "xmax": max(xs), "ymax": max(ys)}
 
 
+def polygon_rows(polys: list[dict]) -> list[dict]:
+    """Feature rows (polygon_id, name, bbox, parts) for polygons in the
+    FIXTURE_POLYGONS shape; a missing name is None."""
+    return [
+        {
+            "polygon_id": p["polygon_id"],
+            "name": p.get("name"),
+            "bbox": _bbox(p["parts"]),
+            "parts": [
+                {
+                    "part_idx": i,
+                    "is_hole": part["is_hole"],
+                    "ring": [{"x": v[0], "y": v[1]} for v in part["ring"]],
+                }
+                for i, part in enumerate(p["parts"])
+            ],
+        }
+        for p in polys
+    ]
+
+
+POLYGONS_SCHEMA = (
+    "polygon_id BIGINT, name STRING, "
+    "bbox STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>, "
+    "parts ARRAY<STRUCT<part_idx: INT, is_hole: BOOLEAN, "
+    "ring: ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>>"
+)
+
+
 def polygons_df(spark: SparkSession, polys: list[dict] | None = None) -> DataFrame:
     """Fixture polygons as the canonical features-table shape (SURVEY §1.2)."""
     polys = polys if polys is not None else FIXTURE_POLYGONS
-    rows = []
-    for p in polys:
-        rows.append(
-            {
-                "polygon_id": p["polygon_id"],
-                "name": p["name"],
-                "bbox": _bbox(p["parts"]),
-                "parts": [
-                    {
-                        "part_idx": i,
-                        "is_hole": part["is_hole"],
-                        "ring": [{"x": v[0], "y": v[1]} for v in part["ring"]],
-                    }
-                    for i, part in enumerate(p["parts"])
-                ],
-            }
-        )
-    schema = (
-        "polygon_id BIGINT, name STRING, "
-        "bbox STRUCT<xmin: DOUBLE, ymin: DOUBLE, xmax: DOUBLE, ymax: DOUBLE>, "
-        "parts ARRAY<STRUCT<part_idx: INT, is_hole: BOOLEAN, "
-        "ring: ARRAY<STRUCT<x: DOUBLE, y: DOUBLE>>>>"
-    )
-    return spark.createDataFrame(rows, schema=schema)
+    return local_frame(spark, polygon_rows(polys), POLYGONS_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

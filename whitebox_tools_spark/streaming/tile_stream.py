@@ -2,8 +2,8 @@
 
 WBT itself is strictly batch (SURVEY §2.13); this is the engine's bonus
 incremental path: `readStream` over an append-only source ->
-extract points -> assign tiles -> `foreachBatch` partitioned append.
-Each micro-batch reuses the exact batch operators, so streaming output
+extract points -> assign tiles -> `foreachBatch` append via `write_tiles`.
+Each micro-batch reuses the exact batch operators (tile write included), so streaming output
 is bit-identical to a batch backfill — the property that makes
 incremental tiling safe to mix with batch reprocessing.
 """
@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.tiling import TileGrid, tile_exprs
+from ..operators.tiling import TileGrid, tile_exprs, write_tiles
 
 
 def tile_stream_writer(grid: TileGrid, out_dir: str, checkpoint_dir: str):
@@ -28,7 +28,7 @@ def tile_stream_writer(grid: TileGrid, out_dir: str, checkpoint_dir: str):
             .withColumn("tile_row", F.expr(ex["tile_row"]))
             .withColumn("tile_col", F.expr(ex["tile_col"]))
         )
-        out.write.mode("append").partitionBy("tile_id").parquet(out_dir)
+        write_tiles(out, out_dir, mode="append")
 
     return write_batch
 
