@@ -5,10 +5,12 @@ import math
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from whitebox_tools_spark.functions.raster_math import GridMeta
 from whitebox_tools_spark.operators.hydro import (cost_distance, downslope_flowpath_length,
                                                   fill_depressions, wetness_index)
+from whitebox_tools_spark.plans.iterate import fixpoint
 
 
 def _df(spark, vals):
@@ -86,9 +88,33 @@ def test_fill_depressions_tiled_exchange_matches_numpy(spark):
         assert v == want[r, c], (r, c, v, want[r, c])
 
 
-def test_fill_depressions_tiled_matches_jacobi(spark):
-    from whitebox_tools_spark.operators.hydro import fill_depressions_jacobi
+def fill_depressions_jacobi(cells, meta, max_rounds=128):
+    """Jacobi-iteration reference for fill_depressions: the same
+    fixpoint, O(depression diameter) rounds — the small-grid cross-check
+    the tiled plan is gated against."""
+    offs = [(-1, 0), (1, 0), (0, -1), (0, 1), (-1, -1), (-1, 1), (1, -1), (1, 1)]
+    pairs = ", ".join(f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol)" for dr, dc in offs)
+    border = f"(row = 0 OR col = 0 OR row = {meta.rows - 1} OR col = {meta.columns - 1})"
+    w = cells.selectExpr(
+        "row", "col", "value AS z",
+        f"CASE WHEN {border} THEN value ELSE CAST('Infinity' AS DOUBLE) END AS w",
+    )
 
+    def relax(w):
+        scattered = w.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
+            "__n.nrow AS row", "__n.ncol AS col", "w AS nw"
+        )
+        nmin = scattered.groupBy("row", "col").agg(F.min("nw").alias("nmin"))
+        return w.join(nmin, ["row", "col"], "left").selectExpr(
+            "row", "col", "z", "w AS __prev",
+            f"CASE WHEN {border} THEN z ELSE GREATEST(z, LEAST(w, COALESCE(nmin, w))) END AS w",
+        )
+
+    w = fixpoint(w, relax, "w <> __prev", "fill_depressions_jacobi", max_rounds)
+    return w.selectExpr("row", "col", "w AS value")
+
+
+def test_fill_depressions_tiled_matches_jacobi(spark):
     rng = np.random.RandomState(77)
     vals = rng.rand(12, 12) * 100.0
     vals[2:10, 2:10] -= 60.0

@@ -168,9 +168,8 @@ def test_isobasins_partition(spark, dem):
     assert max(sizes.values()) <= 3 * 20  # bounded basins
 
 
-def test_unnest_basins_layers(spark, dem):
-    df, _ = dem
-    # two pour points, the second strictly downstream of the first
+def _pour_on_path(spark, df):
+    """Two pour points, the second two D8 steps downstream of the first."""
     ptr = HY.d8_pointer(df, META)
     e = {(r["row"], r["col"]): (r["drow"], r["dcol"])
          for r in HY.d8_edges(ptr).collect()}
@@ -184,9 +183,14 @@ def test_unnest_basins_layers(spark, dem):
             break
     assert path is not None
     p1, p2 = path[0], path[2]
-    pour = spark.createDataFrame(
+    return p1, spark.createDataFrame(
         [(1, p1[0], p1[1]), (2, p2[0], p2[1])],
         "outlet_id long, row long, col long")
+
+
+def test_unnest_basins_layers(spark, dem):
+    df, _ = dem
+    p1, pour = _pour_on_path(spark, df)
     out = HY.unnest_basins(df, META, pour).collect()
     lay = {}
     for r in out:
@@ -203,3 +207,12 @@ def test_unnest_basins_layers(spark, dem):
     # the nested basin (layer 1, outlet 2) contains outlet 1's cell
     l1_cells = {(r, c) for r, c, o in lay[1] if o == 2}
     assert p1 in l1_cells
+
+
+def test_unnest_basins_budget_exhausted(spark, dem):
+    """One doubling cannot close a pour path longer than two cells."""
+    from whitebox_tools_spark.plans.iterate import ConvergenceError
+
+    df, _ = dem
+    with pytest.raises(ConvergenceError, match="unnest_basins"):
+        HY.unnest_basins(df, META, _pour_on_path(spark, df)[1], max_doublings=1)

@@ -51,8 +51,10 @@ def brute_knn(qx, qy, tx, ty, k):
     return out
 
 
-def numpy_wbt_knn(qx, qy, tx, ty, k, radius):
-    """Literal transcription of fixed_radius_search.rs:132-216."""
+def numpy_wbt_knn(qx, qy, tx, ty, k, radius, max_rounds=None):
+    """Literal transcription of fixed_radius_search.rs:132-216; with
+    max_rounds, shells stop there and a query keeps its partial top-k
+    (no entry when it saw no candidate)."""
     inv_r = 1.0 / (radius * 0.5)
     bins: dict[tuple[int, int], list[int]] = {}
     for j in range(len(tx)):
@@ -67,7 +69,7 @@ def numpy_wbt_knn(qx, qy, tx, ty, k, radius):
             for n in range(-1, 2):
                 cand.extend(bins.get((ci + m, cj + n), []))
         shell = 2
-        while len(cand) < k:
+        while len(cand) < k and (max_rounds is None or shell <= max_rounds):
             for m in range(-shell, shell + 1):
                 for n in range(-shell, shell + 1):
                     if abs(m) == shell or abs(n) == shell:
@@ -75,7 +77,8 @@ def numpy_wbt_knn(qx, qy, tx, ty, k, radius):
             shell += 1
         d2 = [(qx[i] - tx[j]) ** 2 + (qy[i] - ty[j]) ** 2 for j in cand]
         order = sorted(range(len(cand)), key=lambda a: (d2[a], cand[a]))[:k]
-        out[i] = [(cand[a], d2[a]) for a in order]
+        if order:
+            out[i] = [(cand[a], d2[a]) for a in order]
     return out
 
 
@@ -97,6 +100,24 @@ def test_wbt_knn_matches_numpy_transcription(spark, layers):
     q, t, (qx, qy, tx, ty) = layers
     got = _collect(knn_join_wbt(q, t, k=K, radius=RADIUS))
     exp = numpy_wbt_knn(qx, qy, tx, ty, K, RADIUS)
+    assert got == exp
+
+
+@pytest.mark.parametrize("k", [1, 4])
+@pytest.mark.parametrize("max_rounds", [8, 1])
+def test_exact_knn_round_budget(spark, layers, k, max_rounds):
+    """max_rounds=1 leaves stragglers, which the exact join brute-forces."""
+    q, t, (qx, qy, tx, ty) = layers
+    got = _collect(knn_join_exact(q, t, k=k, radius=RADIUS, max_rounds=max_rounds))
+    assert got == brute_knn(qx, qy, tx, ty, k)
+
+
+def test_wbt_knn_round_budget(spark, layers):
+    """max_rounds=1 stops at the 3x3 block: queries keep a partial top-k."""
+    q, t, (qx, qy, tx, ty) = layers
+    got = _collect(knn_join_wbt(q, t, k=K, radius=RADIUS, max_rounds=1))
+    exp = numpy_wbt_knn(qx, qy, tx, ty, K, RADIUS, max_rounds=1)
+    assert any(len(v) < K for v in exp.values())
     assert got == exp
 
 

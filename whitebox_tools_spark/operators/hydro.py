@@ -12,15 +12,14 @@ Reference anchors:
   hydro_analysis/basins.rs.
 - ExtractStreams (accumulation threshold): stream_network_analysis/extract_streams.rs.
 
-Plan shapes:
+Plan shapes (round loops run on plans/iterate.py):
 - pointer: one scatter + pivot aggregation, then a pure fold expression
   (WholeStageCodegen; the same text builds the DuckDB oracle).
-- accumulation: topological "peeling" — each round resolves cells whose
-  inflows are all resolved (1 + sum of inflow accumulations). Rounds =
-  longest flow path; each round shrinks the frontier, lineage truncated
-  by localCheckpoint. The D8 graph is acyclic by construction (flow
-  strictly decreases z), so peeling terminates.
-- basins: pointer jumping (next = next(next)) — O(log path) rounds.
+- accumulation: pointer-doubling transitive closure over the D8
+  functional graph (`closure`) — O(log longest-path) rounds; the tiled
+  variant contracts each tile first and closes only the exit-cell graph.
+- basins, flow-path walks, fills and cost surfaces: relax / pointer
+  jumping to a fixpoint (`fixpoint`), one eager action per round.
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.raster_math import GridMeta
-from ..plans.iterate import ensure_converged
+from ..plans.iterate import closure, ensure_converged, fixpoint, materialize
 
 # neighbor tables from d8_pointer.rs:252-254
 D8_DX = [1, 1, 1, 0, -1, -1, -1, 0]
@@ -132,26 +131,8 @@ def d8_flow_accumulation(cells: DataFrame, meta: GridMeta,
     nodes = ptr.selectExpr(f"(row * {c}L + col) AS id", "row", "col").persist()
     e = d8_edges(ptr).selectExpr(f"(row * {c}L + col) AS src",
                                  f"(drow * {c}L + dcol) AS dst")
-    reach = nodes.selectExpr("id AS src", "id AS dst").unionByName(e) \
-                 .dropDuplicates().localCheckpoint(eager=True)
-    prev = reach.count()
-    for _ in range(max_doublings):
-        grown = (
-            reach.alias("a")
-            .join(reach.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst")
-            .unionByName(reach)
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
-        n = grown.count()
-        reach = grown
-        if n == prev:
-            break
-        prev = n
-    else:
-        ensure_converged(n - prev if n != prev else 1,
-                         "d8_flow_accumulation closure", max_doublings)
+    reach = closure(nodes.selectExpr("id AS src", "id AS dst").unionByName(e),
+                    "d8_flow_accumulation closure", max_doublings)
     accum = reach.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
     out = nodes.join(accum, nodes["id"] == accum["dst"]).select(
         "row", "col", F.col("n").cast("double").alias("value")
@@ -170,18 +151,14 @@ def basins(cells: DataFrame, meta: GridMeta, max_rounds: int = 32) -> DataFrame:
         d8_edges(ptr).selectExpr(f"(row * {c}L + col) AS id",
                                  f"(drow * {c}L + dcol) AS nid"),
         "id", "left",
-    ).selectExpr("id", "row", "col", "COALESCE(nid, id) AS nxt").localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    ).selectExpr("id", "row", "col", "COALESCE(nid, id) AS nxt")
+
+    def jump(nxt):
         hop = nxt.selectExpr("id AS j_id", "nxt AS j_nxt")
-        new = nxt.join(hop, nxt["nxt"] == hop["j_id"], "left").selectExpr(
-            "id", "row", "col", "nxt AS __prev", "COALESCE(j_nxt, nxt) AS nxt"
-        ).localCheckpoint(eager=True)
-        changed = new.where("nxt <> __prev").count()
-        nxt = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "basins pointer jumping", max_rounds)
+        return nxt.join(hop, nxt["nxt"] == hop["j_id"], "left").selectExpr(
+            "id", "row", "col", "nxt AS __prev", "COALESCE(j_nxt, nxt) AS nxt")
+
+    nxt = fixpoint(nxt, jump, "nxt <> __prev", "basins pointer jumping", max_rounds)
     from ..plans.rank import dense_rank_small
 
     reps = dense_rank_small(nxt, "nxt", "basin_id")
@@ -217,36 +194,19 @@ def watershed(cells: DataFrame, meta: GridMeta, outlets: DataFrame,
     upstream outlet shadows any outlet further down); cells draining to
     no outlet get no row. outlets: (outlet_id, row, col).
 
-    Plan: hop-annotated pointer-doubling closure (src, dst, hops) with
-    min-hops dedupe, then per-cell argmin(hops) over outlet dsts —
-    O(log longest-path) joins.
+    Plan: hop-annotated pointer-doubling closure (src, dst, hops), then
+    per-cell argmin(hops) over outlet dsts — O(log longest-path) joins.
+    Every (src, dst) pair of the D8 functional graph has exactly one
+    path, so the closure's (src, dst) dedupe keeps the path's hop count.
     """
     c = meta.columns
     ptr = d8_pointer(cells, meta)
     nodes = ptr.selectExpr(f"(row * {c}L + col) AS id", "row", "col").persist()
     e = d8_edges(ptr).selectExpr(f"(row * {c}L + col) AS src",
                                  f"(drow * {c}L + dcol) AS dst", "CAST(1 AS INT) AS h")
-    reach = nodes.selectExpr("id AS src", "id AS dst", "CAST(0 AS INT) AS h") \
-                 .unionByName(e).groupBy("src", "dst").agg(F.min("h").alias("h")) \
-                 .localCheckpoint(eager=True)
-    prev = reach.count()
-    for _ in range(max_doublings):
-        grown = (
-            reach.alias("a")
-            .join(reach.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst", "a.h + b.h AS h")
-            .unionByName(reach)
-            .groupBy("src", "dst").agg(F.min("h").alias("h"))
-            .localCheckpoint(eager=True)
-        )
-        n = grown.count()
-        reach = grown
-        if n == prev:
-            break
-        prev = n
-    else:
-        ensure_converged(n - prev if n != prev else 1,
-                         "watershed closure", max_doublings)
+    reach = closure(
+        nodes.selectExpr("id AS src", "id AS dst", "CAST(0 AS INT) AS h").unionByName(e),
+        "watershed closure", max_doublings, sums=("h",))
     out_tbl = outlets.selectExpr(f"(row * {c}L + col) AS dst", "outlet_id")
     hits = reach.join(out_tbl, "dst").groupBy("src").agg(
         F.expr("MIN_BY(outlet_id, STRUCT(h, outlet_id))").alias("outlet_id")
@@ -256,39 +216,6 @@ def watershed(cells: DataFrame, meta: GridMeta, outlets: DataFrame,
     )
     nodes.unpersist()
     return res
-
-
-def fill_depressions_jacobi(cells: DataFrame, meta: GridMeta,
-                            max_rounds: int = 128) -> DataFrame:
-    """Jacobi-iteration reference for fill_depressions (same fixpoint,
-    O(depression diameter) rounds — kept as the small-grid cross-check
-    the tiled plan is pytest-gated against).
-    """
-    offs = [(-1, 0), (1, 0), (0, -1), (0, 1), (-1, -1), (-1, 1), (1, -1), (1, 1)]
-    pairs = ", ".join(f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol)" for dr, dc in offs)
-    border = (f"(row = 0 OR col = 0 OR row = {meta.rows - 1} OR col = {meta.columns - 1})")
-    w = cells.selectExpr(
-        "row", "col", "value AS z",
-        f"CASE WHEN {border} THEN value ELSE CAST('Infinity' AS DOUBLE) END AS w",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        scattered = w.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
-            "__n.nrow AS row", "__n.ncol AS col", "w AS nw"
-        )
-        nmin = scattered.groupBy("row", "col").agg(F.min("nw").alias("nmin"))
-        new = w.join(nmin, ["row", "col"], "left").selectExpr(
-            "row", "col", "z", "w AS __prev",
-            f"CASE WHEN {border} THEN z ELSE GREATEST(z, LEAST(w, COALESCE(nmin, w))) END AS w",
-        ).localCheckpoint(eager=True)
-        # previous value rides along — the changed count is a cheap scan
-        # of the materialized blocks, not a second full self-join job
-        changed = new.where("w <> __prev").count()
-        w = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "fill_depressions", max_rounds)
-    return w.selectExpr("row", "col", "w AS value")
 
 
 def _pflood_kernel(tile: int, rows: int, cols: int, eps: float = 0.0):
@@ -399,7 +326,7 @@ def fill_depressions(cells: DataFrame, meta: GridMeta,
     w = cells.selectExpr(
         "row", "col", "value AS z",
         f"CASE WHEN {border} THEN value ELSE CAST('Infinity' AS DOUBLE) END AS w",
-    ).localCheckpoint(eager=True)
+    )
     single_tile = rows <= tile and cols <= tile
     schema = StructType([
         StructField("row", LongType(), False),
@@ -414,13 +341,12 @@ def fill_depressions(cells: DataFrame, meta: GridMeta,
     pairs = ", ".join(
         f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol)"
         for dr, dc in offs)
-    for _ in range(max_rounds):
-        own = w.selectExpr(
+
+    def flood(w):
+        staged = w.selectExpr(
             f"row DIV {tile} AS tr", f"col DIV {tile} AS tc",
             "row", "col", "z", "w", "CAST(0 AS INT) AS halo")
-        if single_tile:
-            staged = own
-        else:
+        if not single_tile:
             # halo scatter: tile-border cells carry their w estimate to
             # every adjacent tile they touch (narrow — 4/tile of cells)
             halo = (
@@ -435,21 +361,30 @@ def fill_depressions(cells: DataFrame, meta: GridMeta,
                        f"AND tc <= {(cols - 1) // tile}")
                 .dropDuplicates(["tr", "tc", "row", "col"])
             )
-            staged = own.unionByName(halo)
-        new = staged.groupBy("tr", "tc").applyInPandas(
-            kernel, schema=schema).localCheckpoint(eager=True)
-        if single_tile:
-            # one tile, no boundary exchange: round 1 is the exact fixpoint
-            w = new.drop("__prev")
-            changed = 0
-            break
-        changed = new.where("w <> __prev").count()
-        w = new.drop("__prev")
-        if changed == 0:
-            break
+            staged = staged.unionByName(halo)
+        return staged.groupBy("tr", "tc").applyInPandas(kernel, schema=schema)
+
+    if single_tile:
+        # one tile, no boundary exchange: round 1 is the exact fixpoint
+        w, _ = materialize(flood(w))
     else:
-        ensure_converged(changed, "fill_depressions", max_rounds)
+        w = fixpoint(w, flood, "w <> __prev", "fill_depressions", max_rounds)
     return w.selectExpr("row", "col", "w AS value")
+
+
+def _jump_with_steps(state: DataFrame, ptr: str) -> DataFrame:
+    """One pointer jump of (id, row, col, <ptr>, nr, nc, nd): follow the
+    pointer and add the target's integer step counts; the old pointer
+    rides along as __prev."""
+    hop = state.selectExpr("id AS j_id", f"{ptr} AS j_ptr", "nr AS j_nr",
+                           "nc AS j_nc", "nd AS j_nd")
+    return state.join(hop, state[ptr] == hop["j_id"], "left").selectExpr(
+        "id", "row", "col", f"{ptr} AS __prev",
+        f"COALESCE(j_ptr, {ptr}) AS {ptr}",
+        "nr + COALESCE(j_nr, 0L) AS nr",
+        "nc + COALESCE(j_nc, 0L) AS nc",
+        "nd + COALESCE(j_nd, 0L) AS nd",
+    )
 
 
 def downslope_flowpath_length(cells: DataFrame, meta: GridMeta,
@@ -484,23 +419,9 @@ def downslope_flowpath_length(cells: DataFrame, meta: GridMeta,
         "id", "row", "col", "COALESCE(nxt, id) AS nxt",
         "COALESCE(nr, 0L) AS nr", "COALESCE(nc, 0L) AS nc",
         "COALESCE(nd, 0L) AS nd",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_doublings):
-        hop = state.selectExpr("id AS j_id", "nxt AS j_nxt", "nr AS j_nr",
-                               "nc AS j_nc", "nd AS j_nd")
-        new = state.join(hop, state["nxt"] == hop["j_id"], "left").selectExpr(
-            "id", "row", "col", "nxt AS __prev",
-            "COALESCE(j_nxt, nxt) AS nxt",
-            "nr + COALESCE(j_nr, 0L) AS nr",
-            "nc + COALESCE(j_nc, 0L) AS nc",
-            "nd + COALESCE(j_nd, 0L) AS nd",
-        ).localCheckpoint(eager=True)
-        changed = new.where("nxt <> __prev").count()
-        state = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "downslope_flowpath_length doubling", max_doublings)
+    )
+    state = fixpoint(state, lambda s: _jump_with_steps(s, "nxt"), "nxt <> __prev",
+                     "downslope_flowpath_length doubling", max_doublings)
     return state.selectExpr("row", "col", f"{_len_expr(meta)} AS value")
 
 
@@ -525,6 +446,38 @@ def wetness_index(cells: DataFrame, meta: GridMeta) -> DataFrame:
     )
 
 
+def _cost_lengths(meta: GridMeta) -> list[float]:
+    """Step length per D8 direction for cost_distance / cost_allocation
+    (their diagonal is sqrt(rx ** 2 + ry ** 2), as in their oracles)."""
+    diag = math.sqrt(meta.resolution_x ** 2 + meta.resolution_y ** 2)
+    return [diag if dx and dy else meta.resolution_x if dx else meta.resolution_y
+            for dx, dy in zip(D8_DX, D8_DY)]
+
+
+def _cost_relax(state: DataFrame, lengths: list[float], best: str,
+                update: list[str], payload: tuple[str, ...] = ()) -> DataFrame:
+    """One Bellman-Ford round of a cost surface (row, col, c, acc, ...)
+    over the 8-neighbour graph. Each neighbour offers
+    a = acc_n + (c_n + c) / 2 * lengths[i], with `back` the D8 direction
+    to it and the `payload` columns of its state; `best` folds a cell's
+    offers into `b`, and `update` projects the rest of the next state
+    after (row, col, c)."""
+    pairs = ", ".join(
+        f"STRUCT(row + ({D8_DY[i]}L) AS nrow, col + ({D8_DX[i]}L) AS ncol, "
+        f"{lengths[i]!r} AS dist, {(i + 4) % 8} AS back)"
+        for i in range(8))
+    offers = (
+        state.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))"))
+        .selectExpr("__n.nrow AS row", "__n.ncol AS col", "acc AS nacc", "c AS nc",
+                    "__n.dist AS dist", "__n.back AS back", *payload)
+        .join(state.selectExpr("row", "col", "c AS mc"), ["row", "col"], "inner")
+        .selectExpr("row", "col", "nacc + (nc + mc) / 2.0 * dist AS a", "back",
+                    *payload)
+    )
+    b = offers.groupBy("row", "col").agg(F.expr(best).alias("b"))
+    return state.join(b, ["row", "col"], "left").selectExpr("row", "col", "c", *update)
+
+
 def cost_distance(cost: DataFrame, meta: GridMeta, source_pred: str,
                   max_rounds: int = 96) -> DataFrame:
     """CostDistance (gis_analysis/cost_distance.rs semantics):
@@ -535,39 +488,16 @@ def cost_distance(cost: DataFrame, meta: GridMeta, source_pred: str,
     — each round a cell adopts min(acc, min over neighbors(acc_n +
     step)); converges in O(longest least-cost path in cells) rounds.
     """
-    import math
-
-    diag = math.sqrt(meta.resolution_x ** 2 + meta.resolution_y ** 2)
-    offs = [(-1, 0, meta.resolution_y), (1, 0, meta.resolution_y),
-            (0, -1, meta.resolution_x), (0, 1, meta.resolution_x),
-            (-1, -1, diag), (-1, 1, diag), (1, -1, diag), (1, 1, diag)]
-    pairs = ", ".join(
-        f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol, {d!r} AS dist)"
-        for dr, dc, d in offs
-    )
     state = cost.selectExpr(
         "row", "col", "value AS c",
         f"CASE WHEN {source_pred} THEN 0.0 ELSE CAST('Infinity' AS DOUBLE) END AS acc",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
-        scattered = state.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
-            "__n.nrow AS row", "__n.ncol AS col", "acc AS nacc", "c AS nc", "__n.dist AS dist"
-        )
-        relax = scattered.join(
-            state.selectExpr("row", "col", "c AS mc"), ["row", "col"], "inner"
-        ).groupBy("row", "col").agg(
-            F.min(F.expr("nacc + (nc + mc) / 2.0 * dist")).alias("cand")
-        )
-        new = state.join(relax, ["row", "col"], "left").selectExpr(
-            "row", "col", "c", "acc AS __prev",
-            "LEAST(acc, COALESCE(cand, acc)) AS acc"
-        ).localCheckpoint(eager=True)
-        changed = new.where("acc <> __prev").count()
-        state = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "cost_distance relaxation", max_rounds)
+    )
+
+    def relax(state):
+        return _cost_relax(state, _cost_lengths(meta), "MIN(a)", [
+            "acc AS __prev", "LEAST(acc, COALESCE(b, acc)) AS acc"])
+
+    state = fixpoint(state, relax, "acc <> __prev", "cost_distance relaxation", max_rounds)
     return state.selectExpr("row", "col", "acc AS value")
 
 
@@ -604,25 +534,22 @@ def _labeled_links(cells: DataFrame, meta: GridMeta, threshold: float):
     streams, e = _stream_edges(cells, meta, threshold)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
     chain_e = e.join(indeg.where("n >= 2").select("dst"), "dst", "left_anti")
-    lbl = streams.selectExpr("id", "row", "col", "id AS lbl").localCheckpoint(eager=True)
+    lbl = streams.selectExpr("id", "row", "col", "id AS lbl")
     both = chain_e.unionByName(chain_e.selectExpr("dst AS src", "src AS dst"))
-    for _ in range(48):
+
+    def propagate(lbl):
         nb = both.join(lbl.selectExpr("id AS src", "lbl AS nlbl"), "src") \
                  .groupBy("dst").agg(F.min("nlbl").alias("mn"))
         new = lbl.join(nb.withColumnRenamed("dst", "id"), "id", "left") \
                  .selectExpr("id", "row", "col", "lbl",
                              "LEAST(lbl, COALESCE(mn, lbl)) AS nl")
         owners = new.selectExpr("id AS o_id", "nl AS o_lbl")
-        new = new.join(owners, new["nl"] == owners["o_id"], "left") \
-                 .selectExpr("id", "row", "col", "lbl AS __prev",
-                             "LEAST(nl, COALESCE(o_lbl, nl)) AS nl") \
-                 .localCheckpoint(eager=True)
-        changed = new.where("nl <> __prev").count()
-        lbl = new.selectExpr("id", "row", "col", "nl AS lbl")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "_labeled_links label propagation", 48)
+        return new.join(owners, new["nl"] == owners["o_id"], "left") \
+                  .selectExpr("id", "row", "col", "lbl AS __prev",
+                              "LEAST(nl, COALESCE(o_lbl, nl)) AS lbl")
+
+    lbl = fixpoint(lbl, propagate, "lbl <> __prev",
+                   "_labeled_links label propagation", 48)
     streams.unpersist()
     return lbl, e
 
@@ -844,26 +771,8 @@ def d8_flow_accumulation_tiled(cells: DataFrame, meta: GridMeta,
     coarse_e = exits.join(entry_exit, "entry").where("e_next IS NOT NULL") \
                     .selectExpr("e AS src", "e_next AS dst")
     nodes = exits.selectExpr("e AS id", "load")
-    reach = nodes.selectExpr("id AS src", "id AS dst").unionByName(coarse_e) \
-                 .dropDuplicates().localCheckpoint(eager=True)
-    prev = reach.count()
-    for _ in range(max_doublings):
-        grown = (
-            reach.alias("a")
-            .join(reach.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst")
-            .unionByName(reach)
-            .dropDuplicates()
-            .localCheckpoint(eager=True)
-        )
-        n = grown.count()
-        reach = grown
-        if n == prev:
-            break
-        prev = n
-    else:
-        ensure_converged(n - prev if n != prev else 1,
-                         "d8_flow_accumulation_tiled coarse closure", max_doublings)
+    reach = closure(nodes.selectExpr("id AS src", "id AS dst").unionByName(coarse_e),
+                    "d8_flow_accumulation_tiled coarse closure", max_doublings)
     totals = (
         reach.join(nodes.selectExpr("id AS src", "load"), "src")
         .groupBy("dst").agg(F.sum("load").alias("total"))
@@ -1615,23 +1524,9 @@ def _walk_to_stream(cells: DataFrame, meta: GridMeta, threshold: float,
         "id", "row", "col", "COALESCE(nxt, id) AS cur",
         "COALESCE(sr, 0L) AS nr", "COALESCE(sc, 0L) AS nc",
         "COALESCE(sd, 0L) AS nd",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_doublings):
-        hop = state.selectExpr("id AS j_id", "cur AS j_cur",
-                               "nr AS j_nr", "nc AS j_nc", "nd AS j_nd")
-        new = state.join(hop, state["cur"] == hop["j_id"], "left").selectExpr(
-            "id", "row", "col", "cur AS __prev",
-            "COALESCE(j_cur, cur) AS cur",
-            "nr + COALESCE(j_nr, 0L) AS nr",
-            "nc + COALESCE(j_nc, 0L) AS nc",
-            "nd + COALESCE(j_nd, 0L) AS nd",
-        ).localCheckpoint(eager=True)
-        changed = new.where("cur <> __prev").count()
-        state = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "_walk_to_stream doubling", max_doublings)
+    )
+    state = fixpoint(state, lambda s: _jump_with_steps(s, "cur"), "cur <> __prev",
+                     "_walk_to_stream doubling", max_doublings)
     out = state.join(streams.selectExpr("sid AS cur", "1 AS __term_stream"),
                      "cur", "left") \
                .join(streams.selectExpr("sid AS id", "1 AS __self_stream"),
@@ -1738,27 +1633,10 @@ def _stream_closure(cells: DataFrame, meta: GridMeta, threshold: float,
         f"CAST(CASE WHEN (src DIV {c}) = (dst DIV {c}) THEN 1 ELSE 0 END AS LONG) AS nc",
         "CAST(CASE WHEN n_in >= 2 THEN 1 ELSE 0 END AS LONG) AS nb",
     ).persist()
-    reach = streams.selectExpr("id AS src", "id AS dst", "0L AS nr", "0L AS nc",
-                               "0L AS nd", "0L AS nb") \
-                   .unionByName(e2).localCheckpoint(eager=True)
-    prev = reach.count()
-    for _ in range(max_doublings):
-        grown = (
-            reach.alias("a")
-            .join(reach.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst", "a.nr + b.nr AS nr",
-                        "a.nc + b.nc AS nc", "a.nd + b.nd AS nd", "a.nb + b.nb AS nb")
-            .unionByName(reach)
-            .dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
-        )
-        n = grown.count()
-        reach = grown
-        if n == prev:
-            break
-        prev = n
-    else:
-        ensure_converged(1, "_stream_closure doubling", max_doublings)
+    reach = closure(
+        streams.selectExpr("id AS src", "id AS dst", "0L AS nr", "0L AS nc",
+                           "0L AS nd", "0L AS nb").unionByName(e2),
+        "_stream_closure doubling", max_doublings, sums=("nr", "nc", "nd", "nb"))
     return reach, streams, e2
 
 
@@ -2211,19 +2089,14 @@ def hillslopes(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
     nodes = ptr.selectExpr(f"(row * {c}L + col) AS id", "row", "col")
     state = nodes.join(streams.selectExpr("sid AS id"), "id", "left_anti") \
                  .join(e_ns, "id", "left") \
-                 .selectExpr("id", "row", "col", "COALESCE(nxt, id) AS cur") \
-                 .localCheckpoint(eager=True)
-    for _ in range(24):
+                 .selectExpr("id", "row", "col", "COALESCE(nxt, id) AS cur")
+
+    def jump(state):
         hop = state.selectExpr("id AS j_id", "cur AS j_cur")
-        new = state.join(hop, state["cur"] == hop["j_id"], "left").selectExpr(
-            "id", "row", "col", "cur AS __prev", "COALESCE(j_cur, cur) AS cur"
-        ).localCheckpoint(eager=True)
-        changed = new.where("cur <> __prev").count()
-        state = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "hillslopes pointer jumping", 24)
+        return state.join(hop, state["cur"] == hop["j_id"], "left").selectExpr(
+            "id", "row", "col", "cur AS __prev", "COALESCE(j_cur, cur) AS cur")
+
+    state = fixpoint(state, jump, "cur <> __prev", "hillslopes pointer jumping", 24)
     # terminal's own pointer edge: does it enter a stream cell, and how?
     dir_expr = "CAST(LOG2(value) AS INT)"
     term_edge = ptr.where("value > 0").selectExpr(
@@ -2322,24 +2195,10 @@ def _full_closure_with_steps(cells: DataFrame, meta: GridMeta,
         "CAST(CASE WHEN drow <> row AND dcol = col THEN 1 ELSE 0 END AS LONG) AS nr",
         "CAST(CASE WHEN drow = row AND dcol <> col THEN 1 ELSE 0 END AS LONG) AS nc",
     )
-    reach = nodes.selectExpr("id AS src", "id AS dst", "0L AS nr", "0L AS nc",
-                             "0L AS nd").unionByName(e).localCheckpoint(eager=True)
-    prev = reach.count()
-    for _ in range(max_doublings):
-        grown = (
-            reach.alias("a").join(reach.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst", "a.nr + b.nr AS nr",
-                        "a.nc + b.nc AS nc", "a.nd + b.nd AS nd")
-            .unionByName(reach).dropDuplicates(["src", "dst"])
-            .localCheckpoint(eager=True)
-        )
-        n = grown.count()
-        reach = grown
-        if n == prev:
-            break
-        prev = n
-    else:
-        ensure_converged(1, "_full_closure_with_steps", max_doublings)
+    reach = closure(
+        nodes.selectExpr("id AS src", "id AS dst", "0L AS nr", "0L AS nc",
+                         "0L AS nd").unionByName(e),
+        "_full_closure_with_steps", max_doublings, sums=("nr", "nc", "nd"))
     return reach, nodes
 
 
@@ -2595,23 +2454,19 @@ def _fill_depressions_eps(cells: DataFrame, meta: GridMeta, eps: float,
     w = cells.selectExpr(
         "row", "col", "value AS z",
         f"CASE WHEN {border} THEN value ELSE CAST('Infinity' AS DOUBLE) END AS w",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    )
+    minn = "LEAST(" + ", ".join(
+        f"COALESCE(zn_{i} + {eps!r}, CAST('Infinity' AS DOUBLE))"
+        for i in range(8)) + ")"
+
+    def relax(w):
         piv = focal_pivot3_raw(w.selectExpr("row", "col", "w AS value"))
-        minn = "LEAST(" + ", ".join(
-            f"COALESCE(zn_{i} + {eps!r}, CAST('Infinity' AS DOUBLE))"
-            for i in range(8)) + ")"
-        new = (piv.join(w.select("row", "col", "z", F.col("w").alias("__prev")),
-                        ["row", "col"])
-               .selectExpr("row", "col", "z", "__prev",
-                           f"LEAST(__prev, GREATEST(z, {minn})) AS w")
-               .localCheckpoint(eager=True))
-        changed = new.where("w <> __prev").count()
-        w = new.drop("__prev")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "_fill_depressions_eps", max_rounds)
+        return (piv.join(w.select("row", "col", "z", F.col("w").alias("__prev")),
+                         ["row", "col"])
+                .selectExpr("row", "col", "z", "__prev",
+                            f"LEAST(__prev, GREATEST(z, {minn})) AS w"))
+
+    w = fixpoint(w, relax, "w <> __prev", "_fill_depressions_eps", max_rounds)
     return w.selectExpr("row", "col", "w AS value")
 
 
@@ -2806,52 +2661,30 @@ def cost_allocation(cost: DataFrame, meta: GridMeta, source_pred: str,
     cell takes the id of the source reaching it at LEAST accumulated
     cost (ties resolve to the smaller source id). Same Bellman-Ford
     relaxation as cost_distance with an (acc, src) argmin payload."""
-    import math as _m
-
-    diag = _m.sqrt(meta.resolution_x ** 2 + meta.resolution_y ** 2)
-    offs = [(-1, 0, meta.resolution_y), (1, 0, meta.resolution_y),
-            (0, -1, meta.resolution_x), (0, 1, meta.resolution_x),
-            (-1, -1, diag), (-1, 1, diag), (1, -1, diag), (1, 1, diag)]
-    pairs = ", ".join(
-        f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol, {d!r} AS dist)"
-        for dr, dc, d in offs)
     sid = source_id_expr or f"(row * {meta.columns}L + col)"
     state = cost.selectExpr(
         "row", "col", "value AS c",
         f"CASE WHEN {source_pred} THEN 0.0 ELSE CAST('Infinity' AS DOUBLE) END AS acc",
         f"CASE WHEN {source_pred} THEN {sid} ELSE CAST(NULL AS BIGINT) END AS src",
-    ).localCheckpoint(eager=True)
-    for rnd in range(max_rounds):
-        scattered = state.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
-            "__n.nrow AS row", "__n.ncol AS col", "acc AS nacc", "c AS nc",
-            "src AS nsrc", "__n.dist AS dist")
-        relax = scattered.join(
-            state.selectExpr("row", "col", "c AS mc"), ["row", "col"], "inner"
-        ).groupBy("row", "col").agg(
-            F.expr("MIN_BY(STRUCT(nacc + (nc + mc) / 2.0 * dist AS a, nsrc AS s), "
-                   "STRUCT(nacc + (nc + mc) / 2.0 * dist, nsrc))").alias("b"))
-        new = state.join(relax, ["row", "col"], "left").selectExpr(
-            "row", "col", "c", "acc AS __prev_acc", "src AS __prev_src",
+    )
+
+    def relax(state):
+        best = "MIN_BY(STRUCT(a, src AS s), STRUCT(a, src))"
+        return _cost_relax(state, _cost_lengths(meta), best, [
+            "acc AS __prev_acc", "src AS __prev_src",
             # both expressions read the INPUT `acc`/`src` columns (a
             # projection cannot reference its own sibling aliases)
             "CASE WHEN b IS NOT NULL AND b.a < acc THEN b.a ELSE acc END AS acc",
             "CASE WHEN b IS NOT NULL AND (b.a < acc OR (b.a = acc AND "
             "(src IS NULL OR b.s < src))) THEN b.s ELSE src END AS src",
-        ).localCheckpoint(eager=True)
-        if rnd % 4 == 3:
-            # Convergence must track BOTH payload fields: on rasters with
-            # pervasive exact-cost ties (e.g. uniform cost) a round can
-            # change only `src` (the smaller-source-id tie-break walking one
-            # hop per round) while every `acc` is already final.
-            changed = new.where(
-                "acc <> __prev_acc OR NOT (src <=> __prev_src)").count()
-            state = new.drop("__prev_acc", "__prev_src")
-            if changed == 0:
-                break
-        else:
-            state = new.drop("__prev_acc", "__prev_src")
-    else:
-        ensure_converged(1, "cost_allocation relaxation", max_rounds)
+        ], payload=("src",))
+
+    # Convergence must track BOTH payload fields: on rasters with
+    # pervasive exact-cost ties (e.g. uniform cost) a round can change
+    # only `src` (the smaller-source-id tie-break walking one hop per
+    # round) while every `acc` is already final.
+    state = fixpoint(state, relax, "acc <> __prev_acc OR NOT (src <=> __prev_src)",
+                     "cost_allocation relaxation", max_rounds)
     return state.where("src IS NOT NULL").selectExpr(
         "row", "col", "CAST(src AS DOUBLE) AS value")
 
@@ -3185,20 +3018,20 @@ def unnest_basins(cells: DataFrame, meta: GridMeta, pour: DataFrame,
     # pour points' downstream paths by pointer doubling over the FULL edge
     # set, but keep only pour sources (few rows in flight)
     pk = pour.selectExpr("outlet_id", f"(row * {c}L + col) AS pid")
-    reach = pk.selectExpr("pid AS src", "pid AS dst") \
-        .localCheckpoint(eager=True)
+    reach, (prev,) = materialize(pk.selectExpr("pid AS src", "pid AS dst"), "TRUE")
     hop = e
     for _ in range(max_doublings):
-        grown = reach.join(hop.selectExpr("src AS dst", "dst AS nxt"), "dst") \
-            .selectExpr("src", "nxt AS dst").unionByName(reach).distinct() \
-            .localCheckpoint(eager=True)
-        if grown.count() == reach.count():
+        reach, (n,) = materialize(
+            reach.join(hop.selectExpr("src AS dst", "dst AS nxt"), "dst")
+            .selectExpr("src", "nxt AS dst").unionByName(reach).distinct(), "TRUE")
+        grew, prev = n - prev, n
+        if not grew:
             break
-        reach = grown
-        hop = hop.alias("a").join(hop.alias("b"),
-                                  F.col("a.dst") == F.col("b.src")) \
-            .selectExpr("a.src AS src", "b.dst AS dst").distinct() \
-            .localCheckpoint(eager=True)
+        hop, _ = materialize(
+            hop.alias("a").join(hop.alias("b"), F.col("a.dst") == F.col("b.src"))
+            .selectExpr("a.src AS src", "b.dst AS dst").distinct())
+    else:
+        ensure_converged(grew, "unnest_basins pour-path doubling", max_doublings)
     # depth = pour points strictly downstream (on the path, not self)
     down = reach.join(pk.selectExpr("pid AS dst"), "dst", "leftsemi") \
         .where("src <> dst").groupBy("src").count()
@@ -3271,26 +3104,23 @@ def downslope_index(cells: DataFrame, meta: GridMeta, drop: float = 2.0,
     state = cells.selectExpr(
         "row", "col", f"(row * {c}L + col) AS cur", "value AS z0",
         "CAST(0.0 AS DOUBLE) AS dist", "CAST(TRUE AS BOOLEAN) AS moving",
-    ).localCheckpoint(eager=True)
-    for _ in range(max_rounds):
+    )
+
+    def walk(state):
         nxt = state.join(e.selectExpr("src AS cur", "dst", "sl"), "cur", "left") \
             .join(zmap.selectExpr("zid AS dst", "z AS zn"), "dst", "left")
         # the step that reaches the drop IS taken (Hjerdt's L includes it);
         # only after landing there does the walk freeze
-        new = nxt.selectExpr(
-            "row", "col", "z0", "moving AS __was",
+        return nxt.selectExpr(
+            "row", "col", "z0",
             "CASE WHEN moving AND dst IS NOT NULL THEN dst ELSE cur END AS cur",
             "CASE WHEN moving AND dst IS NOT NULL THEN dist + sl "
             "ELSE dist END AS dist",
             f"CASE WHEN moving AND dst IS NOT NULL AND (z0 - zn) < {drop!r} "
             "THEN TRUE ELSE FALSE END AS moving",
-        ).localCheckpoint(eager=True)
-        still = new.where("moving").count()
-        state = new.drop("__was")
-        if still == 0:
-            break
-    else:
-        ensure_converged(still, "downslope_index walk", max_rounds)
+        )
+
+    state = fixpoint(state, walk, "moving", "downslope_index walk", max_rounds)
     j = state.join(zmap.selectExpr("zid AS cur", "z AS zend"), "cur", "left")
     if out_type == "distance":
         return j.selectExpr("row", "col", "dist AS value")
@@ -3441,46 +3271,25 @@ def cost_backlink(cost: DataFrame, meta: GridMeta, source_pred: str,
     on its least-cost path (0 at sources). Same Bellman-Ford relaxation
     as cost_allocation with a direction payload; equal-cost ties take
     the smaller direction code (deterministic)."""
-    import math as _m
-
-    diag = _m.sqrt(meta.resolution_x ** 2 + meta.resolution_y ** 2)
-    lengths = _grid_lengths(meta)
-    pairs = ", ".join(
-        f"STRUCT(row + ({D8_DY[i]}L) AS nrow, col + ({D8_DX[i]}L) AS ncol, "
-        f"{lengths[i]!r} AS dist, {(i + 4) % 8} AS back)"
-        for i in range(8))
     state = cost.selectExpr(
         "row", "col", "value AS c",
         f"CASE WHEN {source_pred} THEN 0.0 ELSE CAST('Infinity' AS DOUBLE) END AS acc",
         f"CASE WHEN {source_pred} THEN 0 ELSE CAST(NULL AS INT) END AS dir",
-    ).localCheckpoint(eager=True)
-    for rnd in range(max_rounds):
-        scattered = state.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
-            "__n.nrow AS row", "__n.ncol AS col", "acc AS nacc", "c AS nc",
-            "__n.dist AS dist", "__n.back AS back")
-        relax = scattered.join(
-            state.selectExpr("row", "col", "c AS mc"), ["row", "col"], "inner"
-        ).groupBy("row", "col").agg(
-            F.expr("MIN_BY(STRUCT(nacc + (nc + mc) / 2.0 * dist AS a, "
-                   "back AS b), STRUCT(nacc + (nc + mc) / 2.0 * dist, back))")
-            .alias("b"))
-        new = state.join(relax, ["row", "col"], "left").selectExpr(
-            "row", "col", "c", "acc AS __pa", "dir AS __pd",
+    )
+
+    def relax(state):
+        best = "MIN_BY(STRUCT(a, back AS b), STRUCT(a, back))"
+        return _cost_relax(state, _grid_lengths(meta), best, [
+            "acc AS __pa", "dir AS __pd",
             "CASE WHEN b IS NOT NULL AND b.a < acc THEN b.a ELSE acc END AS acc",
             "CASE WHEN b IS NOT NULL AND (b.a < acc OR (b.a = acc AND "
             "(dir IS NULL OR b.b < dir))) AND NOT (dir IS NOT NULL AND dir = 0 "
             "AND acc = 0.0) THEN b.b ELSE dir END AS dir",
-        ).localCheckpoint(eager=True)
-        if rnd % 4 == 3:
-            changed = new.where(
-                "acc <> __pa OR NOT (dir <=> __pd)").count()
-            state = new.drop("__pa", "__pd")
-            if changed == 0:
-                break
-        else:
-            state = new.drop("__pa", "__pd")
-    else:
-        ensure_converged(1, "cost_backlink relaxation", max_rounds)
+        ])
+
+    # both fields, as in cost_allocation: a tie can move only `dir`
+    state = fixpoint(state, relax, "acc <> __pa OR NOT (dir <=> __pd)",
+                     "cost_backlink relaxation", max_rounds)
     return state.where("dir IS NOT NULL").selectExpr(
         "row", "col",
         "CAST(CASE WHEN acc = 0.0 THEN 0.0 "

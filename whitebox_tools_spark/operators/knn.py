@@ -18,13 +18,15 @@ Two engines:
   (stop as soon as >= k candidates are seen), for parity with WBT
   fixture outputs.
 
-Physical plan per round: probe side explodes the ring's neighbor bin
-keys (codegen), equi-joins the build side on (cx, cy) — one int64-key
-shuffle per round, AQE-skew-split; per-query top-k via min_by-style
-window with deterministic (dist2, target id) tie-break. Rounds touch
-only still-active queries, so the joins shrink geometrically; at
-10^12-doc scale the bin size is chosen from density (WBT's own
-radius heuristic) so that round 1 resolves almost everything.
+Both run one ring loop (`_ring_search`). Physical plan per round: probe
+side explodes the ring's neighbor bin keys (codegen), equi-joins the
+build side on (cx, cy) — one int64-key shuffle per round,
+AQE-skew-split; per-query top-k via MIN_BY (k=1) or a window with
+deterministic (dist2, target id) tie-break; two eager checkpoints
+(ranked candidates, active queries), the active count observed on the
+second. Rounds touch only still-active queries, so the joins shrink
+geometrically; at 10^12-doc scale the bin size is chosen from density
+(WBT's own radius heuristic) so that round 1 resolves almost everything.
 
 Distances are squared (f64, single expression (dx*dx + dy*dy)) — the
 same arithmetic on both Spark and DuckDB, bit-identical.
@@ -32,10 +34,14 @@ same arithmetic on both Spark and DuckDB, bit-identical.
 
 from __future__ import annotations
 
+import math
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cells import neighbor_offsets, with_frs_cells
+from ..plans.iterate import materialize
 
 
 def _ring_join(
@@ -89,9 +95,28 @@ def _prep(
     return q, t
 
 
-def _nn1_join(
+def _topk(acc: DataFrame, k: int, qid: str, tid: str,
+          carry: tuple[str, ...]) -> DataFrame:
+    """Per-query k smallest rows of `acc` by (dist2, tid), as (qid, tid,
+    dist2, *carry, knn_rank). k=1 is one hash aggregation (MIN_BY), any
+    other k a window sort; carry columns are payload only and never
+    enter the ordering key."""
+    if k == 1:
+        val = ", ".join(["dist2", tid, *carry])
+        return acc.groupBy(qid).agg(
+            F.expr(f"MIN_BY(STRUCT({val}), STRUCT(dist2, {tid}))").alias("b")
+        ).selectExpr(qid, f"b.{tid} AS {tid}", "b.dist2 AS dist2",
+                     *[f"b.{c} AS {c}" for c in carry], "1 AS knn_rank")
+    w = Window.partitionBy(qid).orderBy("dist2", tid)
+    return (acc.withColumn("knn_rank", F.row_number().over(w))
+            .where(F.col("knn_rank") <= k)
+            .select(qid, tid, "dist2", *carry, "knn_rank"))
+
+
+def _ring_search(
     queries: DataFrame,
     targets: DataFrame,
+    k: int,
     radius: float,
     qid: str,
     tid: str,
@@ -100,78 +125,59 @@ def _nn1_join(
     tx: str,
     ty: str,
     max_rounds: int,
-    carry: tuple[str, ...] = (),
+    carry: tuple[str, ...],
+    exact: bool,
 ) -> DataFrame:
-    """Exact 1-NN fast path: per-round hash aggregation (min_by) instead
-    of a window sort, no cross-round candidate accumulation — the best
-    candidate so far rides along with the active query set. Same output
-    contract as knn_join_exact with k=1."""
+    """The ring loop behind both joins. Round `reach` scans Chebyshev
+    ring `reach` for the still-active queries, ranks their accumulated
+    candidates, and resolves a query once its k-th candidate lies
+    inside the stop bound: (reach * bin_size)^2 for the exact join, +inf
+    (= has k candidates) for WBT parity. Rounds exhausted: the exact
+    join brute-forces the stragglers, the WBT join keeps their partial
+    top-k."""
     q, t = _prep(queries, targets, radius, qid, tid, qx, qy, tx, ty, carry)
     t = t.persist()
     bin_size = radius * 0.5
-    # carry columns are payload only: the MIN_BY ordering key stays
-    # (dist2, tid), so results are unchanged — they just ride the struct
-    val = ", ".join(["dist2", tid, *carry])
+    cols = [qid, tid, "dist2", *carry]
 
     active = q.persist()
-    resolved_rounds: list[DataFrame] = []
-    best: DataFrame | None = None  # (qid, best struct) for still-active queries
-    reach = 1
-    while reach <= max_rounds:
-        cand = _ring_join(active, t, reach, qid, tid, carry)
-        round_best = cand.groupBy(qid).agg(
-            F.expr(f"MIN_BY(STRUCT({val}), STRUCT(dist2, {tid}))").alias("b")
-        )
-        if best is not None:
-            merged = best.unionByName(round_best)
-            round_best = merged.groupBy(qid).agg(
-                F.expr("MIN_BY(b, STRUCT(b.dist2, b." + tid + "))").alias("b")
-            )
-        # one eager materialization anchors the round; resolved/best are
-        # cheap filters over the materialized blocks and stay lazy
-        # (2 round barriers instead of 4)
-        round_best = round_best.localCheckpoint(eager=True)
+    found: list[DataFrame] = []
+    pending: DataFrame | None = None  # ranked rows of still-active queries
+    for reach in range(1, max_rounds + 1):
+        # rings are disjoint (reach=1 is the full 3x3 block, reach>1
+        # strict rings), so no (qid, tid) duplicates across rounds
+        cand = _ring_join(active, t, reach, qid, tid, carry).select(cols)
+        acc = cand if pending is None else pending.select(cols).unionByName(cand)
+        ranked, _ = materialize(_topk(acc, k, qid, tid, carry))
         # strict <: a target in the first unscanned ring can sit at exactly
         # reach*bin_size; an equal-distance target with a smaller tid would
         # then be missed (tie-break contract), so ties force one more ring
-        guarantee = float(reach * bin_size) ** 2
-        resolved = round_best.where(F.col("b.dist2") < guarantee)
-        resolved_rounds.append(resolved)
-        best = round_best.where(~(F.col("b.dist2") < guarantee))
-        active_next = active.join(resolved.select(qid), qid, "left_anti") \
-                            .localCheckpoint(eager=True)
-        n_active = active_next.count()
-        active.unpersist()
-        active = active_next
+        bound = float(reach * bin_size) ** 2 if exact else math.inf
+        resolved = ranked.where(
+            (F.col("knn_rank") == k) & (F.col("dist2") < F.lit(bound))
+        ).select(qid)
+        found.append(ranked.join(resolved, qid, "left_semi"))
+        pending = ranked.join(resolved, qid, "left_anti")
+        active, (n_active,) = materialize(active.join(resolved, qid, "left_anti"), "TRUE")
         if n_active == 0:
             break
-        reach += 1
     else:
-        # stragglers: brute force (tiny set)
-        cand = active.crossJoin(t.drop("cx", "cy")).select(
-            qid,
-            F.expr("(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)").alias("dist2"),
-            F.col(tid),
-            *carry,
-        )
-        straggler_best = cand.groupBy(qid).agg(
-            F.expr(f"MIN_BY(STRUCT({val}), STRUCT(dist2, {tid}))").alias("b")
-        )
-        if best is not None:
-            straggler_best = best.unionByName(straggler_best).groupBy(qid).agg(
-                F.expr("MIN_BY(b, STRUCT(b.dist2, b." + tid + "))").alias("b")
+        if exact:
+            # brute force (tiny set); the cross join re-scans every ring,
+            # so the pending rows are a subset of these candidates
+            cand = active.crossJoin(t.drop("cx", "cy")).select(
+                qid,
+                F.col(tid),
+                F.expr("(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)").alias("dist2"),
+                *carry,
             )
-        resolved_rounds.append(straggler_best)
+            found.append(_topk(cand, k, qid, tid, carry))
+        else:
+            found.append(pending)
 
     t.unpersist()
-    active.unpersist()
-    done = resolved_rounds[0]
-    for part in resolved_rounds[1:]:
-        done = done.unionByName(part)
-    return done.selectExpr(
-        qid, f"b.{tid} AS {tid}", "b.dist2 AS dist2",
-        *[f"b.{c} AS {c}" for c in carry], "1 AS knn_rank",
-    )
+    q.unpersist()
+    return reduce(DataFrame.unionByName, found).select(*cols, "knn_rank")
 
 
 def knn_join_exact(
@@ -193,10 +199,10 @@ def knn_join_exact(
     Returns (qid, tid, dist2, *carry, knn_rank) with knn_rank in 1..k
     ordered by (dist2, tid) — identical to a brute-force cross join +
     top-k, but with grid-bounded work. bin_size = radius * 0.5 (FRS
-    parity binning). k=1 dispatches to the aggregation fast path (no
-    window sort). `carry` names extra TARGET columns that ride through
-    the join as payload (saving the caller a re-attach shuffle join by
-    id); they never enter an ordering key, so results are unchanged.
+    parity binning). k=1 ranks by aggregation (no window sort). `carry`
+    names extra TARGET columns that ride through the join as payload
+    (saving the caller a re-attach shuffle join by id); they never
+    enter an ordering key, so results are unchanged.
 
     The per-query bounded top-k window here plays the role of the
     reference's NMinimizer / NMaximizer heap structures
@@ -204,85 +210,8 @@ def knn_join_exact(
     Spark's partial TakeOrderedAndProject / window rank IS the bounded
     heap, picked by the optimizer instead of hand-rolled.
     """
-    if k == 1:
-        return _nn1_join(queries, targets, radius, qid, tid, qx, qy, tx, ty,
-                         max_rounds, carry)
-    spark = queries.sparkSession
-    q, t = _prep(queries, targets, radius, qid, tid, qx, qy, tx, ty, carry)
-    t = t.persist()
-    bin_size = radius * 0.5
-
-    # per-round plan: one Tungsten window sort ranks the ACTIVE queries'
-    # accumulated candidates; resolved-ness is a FILTER on the ranked
-    # output (rank == k AND kth dist2 inside the guarantee) instead of
-    # the former separate done-stats groupBy, and resolved queries'
-    # ranked rows move to `done` so later rounds window only the
-    # still-active tail (the former plan re-sorted every resolved
-    # query's rows on every round)
-    w = Window.partitionBy(qid).orderBy("dist2", tid)
-    out_cols = [qid, tid, "dist2", *carry, "knn_rank"]
-
-    active = q.persist()
-    finished_rounds: list[DataFrame] = []
-    best: DataFrame | None = None  # ranked rows for still-active queries
-    reach = 1
-    while reach <= max_rounds:
-        cand = _ring_join(active, t, reach, qid, tid, carry) \
-            .select(qid, tid, "dist2", *carry)
-        # rings are disjoint (reach=1 is the full 3x3 block, reach>1
-        # strict rings), so no (qid, tid) duplicates across rounds
-        acc = cand if best is None else best.unionByName(cand)
-        # the ONLY eager materializations per round are `ranked` and
-        # `active` (lineage truncation); resolved/finished/best are
-        # cheap filter-joins over the materialized `ranked` blocks and
-        # stay lazy — 2 round barriers instead of 4
-        ranked = (
-            acc.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select(out_cols)
-            .localCheckpoint(eager=True)  # truncate iterative lineage
-        )
-        # a query is done when it has k candidates and the kth is provably
-        # inside the scanned reach: dist2_k < (reach * bin_size)^2 — strict,
-        # so an equal-distance target with a smaller tid in the first
-        # unscanned ring can never be missed (tie-break contract)
-        guarantee = float(reach * bin_size) ** 2
-        resolved = ranked.where(
-            (F.col("knn_rank") == k) & (F.col("dist2") < F.lit(guarantee))
-        ).select(qid)
-        finished_rounds.append(ranked.join(resolved, qid, "left_semi"))
-        best = ranked.join(resolved, qid, "left_anti").select(qid, tid, "dist2", *carry)
-        active_next = active.join(resolved, qid, "left_anti") \
-                            .localCheckpoint(eager=True)
-        n_active = active_next.count()
-        active.unpersist()
-        active = active_next
-        if n_active == 0:
-            break
-        reach += 1
-    else:
-        # exhausted rounds: brute-force the stragglers (tiny set); the
-        # cross join re-scans every ring, so prior `best` rows are a
-        # subset of these candidates and can be dropped outright
-        cand = active.crossJoin(t.drop("cx", "cy")).select(
-            qid,
-            F.col(tid),
-            F.expr("(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)").alias("dist2"),
-            *carry,
-        )
-        straggler = (
-            cand.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select(out_cols)
-        )
-        finished_rounds.append(straggler)
-
-    t.unpersist()
-    active.unpersist()
-    done = finished_rounds[0]
-    for part in finished_rounds[1:]:
-        done = done.unionByName(part)
-    return done.select(out_cols)
+    return _ring_search(queries, targets, k, radius, qid, tid, qx, qy, tx, ty,
+                        max_rounds, carry, exact=True)
 
 
 def knn_join_wbt(
@@ -301,39 +230,8 @@ def knn_join_wbt(
     """WBT-parity approximate kNN: stop expanding as soon as a query has
     seen >= k candidates (fixed_radius_search.rs:180-204 early stop),
     keep the k smallest by (dist2, tid)."""
-    q, t = _prep(queries, targets, radius, qid, tid, qx, qy, tx, ty)
-    t = t.persist()
-
-    active = q.persist()
-    acc: DataFrame | None = None
-    reach = 1
-    while reach <= max_rounds:
-        cand = _ring_join(active, t, reach, qid, tid)
-        acc = cand if acc is None else acc.unionByName(cand)
-        w = Window.partitionBy(qid).orderBy("dist2", tid)
-        acc = (
-            acc.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .drop("knn_rank")
-            .localCheckpoint(eager=True)  # truncate iterative lineage
-        )
-        counts = acc.groupBy(qid).agg(F.count(F.lit(1)).alias("n"))
-        done = counts.where(F.col("n") >= k).select(qid)
-        active_next = active.join(done, qid, "left_anti").localCheckpoint(eager=True)
-        n_active = active_next.count()
-        active.unpersist()
-        active = active_next
-        if n_active == 0:
-            break
-        reach += 1
-
-    t.unpersist()
-    w = Window.partitionBy(qid).orderBy("dist2", tid)
-    return (
-        acc.withColumn("knn_rank", F.row_number().over(w))
-        .where(F.col("knn_rank") <= k)
-        .select(qid, tid, "dist2", "knn_rank")
-    )
+    return _ring_search(queries, targets, k, radius, qid, tid, qx, qy, tx, ty,
+                        max_rounds, (), exact=False)
 
 
 # ---------------------------------------------------------------------------
