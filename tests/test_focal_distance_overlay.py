@@ -125,6 +125,15 @@ def test_clump_diag_connectivity(spark):
     assert out8[(0, 0)] == out8[(1, 1)]
 
 
+def test_clump_round_budget(spark):
+    from whitebox_tools_spark.plans.iterate import ConvergenceError
+
+    df = spark.createDataFrame([(0, c, 1.0) for c in range(6)],
+                               "row long, col long, value double")
+    with pytest.raises(ConvergenceError, match="clump"):
+        clump(df, 6, max_rounds=1).collect()
+
+
 def test_euclidean_distance_bruteforce(spark, ras):
     df, vals = ras
     got = _grid(euclidean_distance(df, META, "value < 5.0"))

@@ -65,6 +65,19 @@ def test_merge_line_segments_chain_and_junction(spark):
     assert len(chain) == 4
 
 
+def test_merge_line_segments_round_budget(spark):
+    from whitebox_tools_spark.plans.iterate import ConvergenceError
+
+    feats = _lines(spark, [
+        [(0.0, 0.0), (10.0, 0.0)],
+        [(10.0, 0.0), (20.0, 0.0)],
+        [(20.0, 0.0), (30.0, 0.0)],
+    ])
+    # one round leaves line 2 at label 1: a partial merge is not a result
+    with pytest.raises(ConvergenceError, match="merge_line_segments"):
+        VO.merge_line_segments(feats, 0.5, max_rounds=1).collect()
+
+
 def test_split_with_lines_crossing(spark):
     feats = _lines(spark, [[(0.0, 5.0), (10.0, 5.0)]])
     splitter = _lines(spark, [[(5.0, 0.0), (5.0, 10.0)]])

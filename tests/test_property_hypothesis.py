@@ -1,10 +1,12 @@
 """Property-based gates (hypothesis) for semantics that have cheap
 independent references: the strict-order fold kernels, the ExactSubstr
-island merge, the deterministic sharder and the cell-cover PIP join.
+island merge, the deterministic sharder, the cell-cover PIP join and
+connected components.
 Spark-backed properties cap max_examples to keep the suite fast; the
 numpy-kernel properties run at full default width."""
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -297,3 +299,52 @@ def test_cellcover_pip_matches_numpy_and_codegen(spark, layer, radius):
                PJ.points_in_polygons(points, polygons, plan="codegen").collect()}
     assert cover == want
     assert codegen == want
+
+
+def _union_find_components(edges):
+    """Reference: {node: smallest node of its component} by union-find."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+_node = st.integers(min_value=0, max_value=19)
+# random edges (self loops, repeats, one direction only) plus a path of
+# 7+ nodes in shuffled id order, long enough for the round-3 jump
+_graph = st.tuples(st.lists(st.tuples(_node, _node), max_size=16),
+                   st.permutations(range(20)),
+                   st.integers(min_value=7, max_value=14))
+
+
+@pytest.mark.parametrize("ids", ["bigint", "struct"])
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_graph)
+def test_connected_components_matches_union_find(spark, ids, graph):
+    from whitebox_tools_spark.operators.clump import connected_components
+
+    rand, perm, n = graph
+    path = list(zip(perm[:n - 1], perm[1:n]))
+    edges = rand + path + [path[0], path[1][::-1], (perm[0], perm[0])]
+    if ids == "struct":
+        # (kx, ky) order differs from the integer order of the same nodes
+        node, schema = (lambda i: (i % 3, i // 3)), "struct<kx:long,ky:long>"
+    else:
+        node, schema = (lambda i: i), "long"
+    df = spark.createDataFrame([(node(a), node(b)) for a, b in edges],
+                               f"a {schema}, b {schema}")
+    got = {(tuple(r["id"]) if ids == "struct" else r["id"]):
+           (tuple(r["comp"]) if ids == "struct" else r["comp"])
+           for r in connected_components(df, "cc property", 32).collect()}
+    assert got == _union_find_components([(node(a), node(b)) for a, b in edges])

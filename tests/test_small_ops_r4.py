@@ -55,7 +55,9 @@ def test_connected_components_generic(spark):
 
     nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
     edges = spark.createDataFrame([(0, 1), (1, 2), (4, 5)], "a long, b long")
-    out = {r["id"]: r["comp"] for r in connected_components(nodes, edges).collect()}
+    comp = nodes.join(connected_components(edges, "cc", 64), "id", "left") \
+        .selectExpr("id", "COALESCE(comp, id) AS comp")
+    out = {r["id"]: r["comp"] for r in comp.collect()}
     assert out == {0: 0, 1: 0, 2: 0, 3: 3, 4: 4, 5: 4}
 
 

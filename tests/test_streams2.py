@@ -5,6 +5,7 @@ we rebuild the stream graph from their (trusted) outputs in plain Python
 and check every tail operator against a brute-force traversal.
 """
 
+import logging
 import math
 
 import numpy as np
@@ -101,6 +102,18 @@ def test_total_length(spark, net):
     row = HY.total_length_channels(df, META, THR).collect()[0]
     exp = sum(_steps(a, b) for a, b in sedges.items())
     assert abs(row["total_length"] - exp) < 1e-9
+
+
+@pytest.mark.parametrize("op", ["hillslopes", "stream_link_class"])
+def test_stream_graph_accumulated_once(spark, net, caplog, op):
+    """The link operators build the stream graph (D8 + tiled
+    accumulation) once per call: one coarse-closure round sequence."""
+    df = net[0]
+    with caplog.at_level(logging.DEBUG, logger="whitebox_tools_spark.plans.iterate"):
+        getattr(HY, op)(df, META, THR).collect()
+    starts = [r for r in caplog.records if r.getMessage().startswith(
+        "d8_flow_accumulation_tiled coarse closure round 1:")]
+    assert len(starts) == 1
 
 
 def test_stream_link_class_codes(spark, net):

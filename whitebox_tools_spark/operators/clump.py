@@ -1,31 +1,69 @@
-"""Clump — raster connected components (equal-value regions).
+"""Clump — raster connected components (equal-value regions) — and
+`connected_components`, the package's one min-label propagation loop.
 
 Reference: gis_analysis/clump.rs:234-286 — row-major BFS over 4- or
 8-connected neighbors with equal cell values, assigning incremental
 clump ids in discovery order.
 
-Spark plan: iterative min-label propagation. Every cell starts with its
-linear index (row*C + col); each round, a cell adopts the minimum label
-among itself and its same-valued neighbors (one scatter + one hash agg
-per round, lineage truncated with localCheckpoint). On convergence each
-component carries the linear index of its row-major-first cell — which
-is exactly the cell where the reference BFS *starts* that clump, so
-DENSE_RANK over representatives reproduces WBT's id numbering
-(1-based, row-major discovery order).
+Spark plan: `clump` builds its edge list once, a self-join of each cell
+with its same-valued forward 4/8-neighbours, and hands it to
+`connected_components`. Every cell ends up labelled with the smallest
+linear index (row*C + col) in its region, i.e. its row-major-first
+cell — exactly the cell where the reference BFS *starts* that clump, so
+DENSE_RANK over representatives reproduces WBT's id numbering (1-based,
+row-major discovery order). A cell with no same-valued neighbour is its
+own clump.
 
-Rounds grow with component diameter (in label-graph hops); each round
-the frontier shrinks, and the `changed` count gates termination. For
-elongated components at scale, alternate with label-pointer jumping
-(label -> label-of-representative join) — implemented as every third
-round below, which bounds rounds at O(log diameter) for path graphs.
+`connected_components` runs on plans/iterate.fixpoint: only rows whose
+label changed last round scatter it to their neighbours (an unchanged
+label was already offered), and every third round a row also adopts
+the label of its label's owner (pointer jumping), which bounds rounds
+at O(log diameter) on path graphs. The smallest id of a component does
+not depend on the propagation schedule, so every caller's labels are
+exact. Clump, polygonize, lidar_segmentation, merge_line_segments,
+the hydro stream links, map_off_terrain_objects and dedup.cluster_pairs
+all run on it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.iterate import ensure_converged
+from ..plans.iterate import fixpoint, materialize
+
+
+def connected_components(edges: DataFrame, what: str,
+                         max_rounds: int) -> DataFrame:
+    """Components of the undirected graph `edges` (a, b): one row
+    (id, comp) per edge endpoint, comp = the smallest id in its
+    component. Ids may be any orderable type (BIGINT, or a STRUCT
+    ordered field by field). Edges may repeat, loop or run one way
+    only: they are symmetrized, deduped and pinned here, once. Nodes
+    without edges are not in the output; callers that need them
+    left-join and take COALESCE(comp, id). Raises ConvergenceError
+    naming `what` when `max_rounds` rounds still leave labels changing.
+    """
+    sym, _ = materialize(edges.selectExpr("a", "b").unionByName(
+        edges.selectExpr("b AS a", "a AS b")).distinct())
+    state = sym.selectExpr("a AS id").distinct() \
+        .selectExpr("id", "id AS comp", "TRUE AS __chg")
+    rnd = 0
+
+    def step(s: DataFrame) -> DataFrame:
+        nonlocal rnd
+        rnd += 1
+        nb = sym.join(s.where("__chg").selectExpr("id AS b", "comp AS bc"), "b") \
+            .groupBy("a").agg(F.min("bc").alias("mn"))
+        new = s.join(nb.withColumnRenamed("a", "id"), "id", "left").selectExpr(
+            "id", "comp AS __old", "LEAST(comp, COALESCE(mn, comp)) AS comp")
+        if rnd % 3 == 0:
+            owners = new.selectExpr("id AS comp", "comp AS owner")
+            new = new.join(owners, "comp", "left").selectExpr(
+                "id", "__old", "LEAST(comp, COALESCE(owner, comp)) AS comp")
+        return new.selectExpr("id", "comp", "comp <> __old AS __chg")
+
+    return fixpoint(state, step, "__chg", what, max_rounds).select("id", "comp")
 
 
 def clump(cells: DataFrame, columns: int, diag: bool = True,
@@ -35,114 +73,26 @@ def clump(cells: DataFrame, columns: int, diag: bool = True,
     Output: (row, col, value, clump_id) with clump_id 1-based in
     row-major discovery order (clump.rs numbering).
     """
-    offs = [(-1, 0), (1, 0), (0, -1), (0, 1)]
-    if diag:
-        offs += [(-1, -1), (-1, 1), (1, -1), (1, 1)]
-    pairs = ", ".join(f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol)" for dr, dc in offs)
-
-    lbl = cells.selectExpr("row", "col", "value", f"(row * {columns}L + col) AS lbl")
-    lbl = lbl.localCheckpoint(eager=True)
-    # frontier scatter: a cell's min can only improve when a neighbor's
-    # label CHANGED last round (an unchanged neighbor's label was already
-    # offered the round after it last changed), so only changed cells
-    # scatter — label dynamics are identical to full scatter while the
-    # per-round shuffle shrinks with the frontier instead of staying
-    # raster-sized. Round 0 scatters everything.
-    frontier = lbl
-
-    for round_no in range(max_rounds):
-        # scatter each frontier cell's label to its neighbors (value
-        # attached so the agg can require equality)
-        scattered = frontier.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).selectExpr(
-            "__n.nrow AS nrow", "__n.ncol AS ncol", "value AS nvalue", "lbl AS nlbl"
-        )
-        # value equality belongs in the JOIN condition: isolated cells
-        # (no same-valued neighbor) must survive with their own label
-        recv = scattered.groupBy("nrow", "ncol", "nvalue").agg(
-            F.min("nlbl").alias("mn"))
-        new = lbl.join(
-            recv,
-            (lbl["row"] == recv["nrow"])
-            & (lbl["col"] == recv["ncol"])
-            & (lbl["value"] == recv["nvalue"]),
-            "left",
-        ).selectExpr("row", "col", "value", "lbl",
-                     "LEAST(COALESCE(mn, lbl), lbl) AS nl")
-        if round_no % 3 == 2:
-            # pointer jumping: adopt the current label of my label's cell
-            owners = new.selectExpr(f"(row * {columns}L + col) AS owner_idx", "nl AS owner_lbl")
-            new = (
-                new.join(owners, new["nl"] == owners["owner_idx"], "left")
-                .selectExpr("row", "col", "value", "lbl",
-                            "LEAST(nl, COALESCE(owner_lbl, nl)) AS nl")
-            )
-        # checkpoint FIRST, then count on the pinned result — counting the
-        # un-checkpointed frame would evaluate the round's join twice
-        new = new.localCheckpoint(eager=True)
-        frontier = new.where(F.col("nl") != F.col("lbl")) \
-                      .selectExpr("row", "col", "value", "nl AS lbl")
-        changed = frontier.count()
-        lbl = new.selectExpr("row", "col", "value", "nl AS lbl")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "clump label propagation", max_rounds)
-
     from ..plans.rank import dense_rank_small
 
+    # forward half of the neighbourhood: every adjacent pair once
+    offs = [(0, 1), (1, 0)] + ([(1, -1), (1, 1)] if diag else [])
+    arms = ", ".join(f"STRUCT(row + ({dr}L) AS nrow, col + ({dc}L) AS ncol)"
+                     for dr, dc in offs)
+    edges = (
+        cells.selectExpr("row", "col", "value", f"EXPLODE(ARRAY({arms})) AS __n")
+        .join(cells.selectExpr("row AS nrow", "col AS ncol", "value AS nvalue"),
+              (F.expr("__n.nrow") == F.col("nrow"))
+              & (F.expr("__n.ncol") == F.col("ncol"))
+              & (F.col("value") == F.col("nvalue")))
+        .selectExpr(f"row * {columns}L + col AS a", f"nrow * {columns}L + ncol AS b")
+    )
+    comp = connected_components(edges, "clump label propagation", max_rounds)
+    lbl, _ = materialize(
+        cells.selectExpr("row", "col", "value", f"row * {columns}L + col AS id")
+        .join(comp, "id", "left")
+        .selectExpr("row", "col", "value", "COALESCE(comp, id) AS lbl"))
     reps = dense_rank_small(lbl, "lbl", "clump_id")
     return lbl.join(reps, "lbl").select(
         "row", "col", "value", F.col("clump_id").cast("long").alias("clump_id")
     )
-
-
-def connected_components(nodes: DataFrame, edges: DataFrame,
-                         id_col: str = "id",
-                         max_rounds: int = 64,
-                         symmetrized: bool = False) -> DataFrame:
-    """Generic connected components over an explicit undirected edge
-    list: nodes (id) x edges (a, b) -> (id, comp) where comp is the
-    smallest node id in the component. Min-label propagation with
-    pointer jumping every third round (the clump machinery generalized
-    to any edge predicate — callers build `edges` declaratively).
-
-    symmetrized=True: `edges` already contains both (a, b) and (b, a)
-    for every pair AND is pinned (checkpointed) by the caller — skips
-    this function's own symmetrize + checkpoint barrier (r06; callers
-    that pre-pin the edge list anyway save one materialization)."""
-    if symmetrized:
-        sym = edges
-        # the caller pinned the edge list, so the node frame is one
-        # cheap distinct over it — no eager barrier of its own (round 0
-        # reads it inline, round 1+ read checkpoints)
-        lbl = nodes.selectExpr(f"{id_col} AS id", f"{id_col} AS comp")
-    else:
-        sym = edges.selectExpr("a", "b").unionByName(
-            edges.selectExpr("b AS a", "a AS b")).distinct() \
-            .localCheckpoint(eager=True)
-        # unknown (possibly expensive) node lineage: pin it, since round
-        # 0's plan otherwise evaluates it twice (scatter + label join)
-        lbl = nodes.selectExpr(f"{id_col} AS id", f"{id_col} AS comp") \
-            .localCheckpoint(eager=True)
-    # frontier propagation (the clump argument): only nodes whose label
-    # changed last round can improve a neighbor's min, so only they
-    # scatter; round 0 scatters everything
-    frontier = lbl
-    for round_no in range(max_rounds):
-        nbr = sym.join(frontier.selectExpr("id AS b", "comp AS bcomp"), "b") \
-            .groupBy("a").agg(F.min("bcomp").alias("mn")) \
-            .withColumnRenamed("a", "id")
-        new = lbl.join(nbr, "id", "left").selectExpr(
-            "id", "comp AS old", "LEAST(comp, COALESCE(mn, comp)) AS comp")
-        if round_no % 3 == 2:
-            owners = new.selectExpr("id AS comp", "comp AS owner")
-            new = new.join(owners, "comp", "left").selectExpr(
-                "id", "old", "LEAST(comp, COALESCE(owner, comp)) AS comp")
-        new = new.localCheckpoint(eager=True)
-        frontier = new.where("comp <> old").select("id", "comp")
-        changed = frontier.count()
-        lbl = new.select("id", "comp")
-        if changed == 0:
-            return lbl
-    ensure_converged(1, "connected_components", max_rounds)
-    return lbl

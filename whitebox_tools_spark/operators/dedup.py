@@ -335,19 +335,14 @@ def cluster_pairs(ids: DataFrame, pairs: DataFrame,
 
     Scale shape: the iterative CC runs only over ids that appear in a
     pair (dup mass << corpus size); singletons cost one final left join.
+    `pairs` go to connected_components raw: it symmetrizes them and pins
+    the (tiny, dup mass only) edge list once, so the upstream pair
+    pipeline (shingles, signatures, band join, verify) runs one time.
     """
     from .clump import connected_components
 
-    # pin the (tiny — dup mass only) SYMMETRIZED edge list ONCE: every
-    # downstream consumer (the CC's edge scatter, the touched-id node
-    # list) otherwise re-executes the ENTIRE upstream pair pipeline —
-    # shingles, signatures, band join, verify — one full extra time
-    # each (r06 optimization; same rows, one pass, one barrier).
-    sym = pairs.selectExpr("id_a AS a", "id_b AS b").unionByName(
-        pairs.selectExpr("id_b AS a", "id_a AS b")).distinct() \
-        .localCheckpoint(eager=True)
-    touched = sym.select(F.col("a").alias("id")).distinct()
-    comp = connected_components(touched, sym, symmetrized=True)
+    comp = connected_components(pairs.selectExpr("id_a AS a", "id_b AS b"),
+                                "cluster_pairs components", 64)
     return (
         ids.selectExpr(f"{id_col} AS id")
         .join(comp, "id", "left")
@@ -374,9 +369,9 @@ def dedup_clusters(
     "which copy do I keep" stage that turns pairwise near-dup evidence
     into a per-document verdict.
 
-    Pipeline: minhash_lsh_pairs -> undirected dup graph -> connected
-    components (min-label propagation with pointer jumping,
-    clump.connected_components) -> one row per INPUT document:
+    Pipeline: minhash_lsh_pairs -> connected components of the
+    undirected dup graph (clump.connected_components, which symmetrizes
+    and pins the raw pairs once) -> one row per INPUT document:
     (doc_id, cluster_id, is_canonical) where cluster_id is the smallest
     doc id in the document's near-dup component (its own id for
     singletons) and is_canonical = 1 exactly for the keeper.

@@ -1872,7 +1872,6 @@ def map_off_terrain_objects(cells: DataFrame, meta: GridMeta,
     resx, resy = meta.resolution_x, meta.resolution_y
     diag = _m.hypot(resx, resy)
     cols_n = meta.columns
-    nodes = cells.selectExpr(f"(row * {cols_n}L + col) AS id")
     offs = [(-1, 0, resy), (0, -1, resx), (-1, -1, diag), (-1, 1, diag)]
     arms = ", ".join(
         f"STRUCT(row + ({dr}L) AS nr, col + ({dc}L) AS nc, {d!r} AS dist)"
@@ -1887,7 +1886,9 @@ def map_off_terrain_objects(cells: DataFrame, meta: GridMeta,
         .selectExpr(f"(row * {cols_n}L + col) AS a",
                     f"(__n.nr * {cols_n}L + __n.nc) AS b")
     )
-    comp = connected_components(nodes, edges)
+    comp = cells.selectExpr(f"(row * {cols_n}L + col) AS id").join(
+        connected_components(edges, "map_off_terrain_objects components", 64),
+        "id", "left").selectExpr("id", "COALESCE(comp, id) AS comp")
     sized = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("__sz"))
     big = sized.where(f"__sz >= {int(min_size)}")
     ranked = big.withColumn(

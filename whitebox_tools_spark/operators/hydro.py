@@ -20,6 +20,9 @@ Plan shapes (round loops run on plans/iterate.py):
   variant contracts each tile first and closes only the exit-cell graph.
 - basins, flow-path walks, fills and cost surfaces: relax / pointer
   jumping to a fixpoint (`fixpoint`), one eager action per round.
+- stream links: connected components of the stream edges between
+  junctions (`clump.connected_components`); the link operators compute
+  the stream graph once (`_stream_edges`) and label it from there.
 """
 
 from __future__ import annotations
@@ -529,29 +532,21 @@ def _stream_edges(cells: DataFrame, meta: GridMeta, threshold: float):
     return streams, e
 
 
-def _labeled_links(cells: DataFrame, meta: GridMeta, threshold: float):
-    """(labeled stream cells with link labels, raw stream edges)."""
-    streams, e = _stream_edges(cells, meta, threshold)
+def _labeled_links(streams: DataFrame, e: DataFrame) -> DataFrame:
+    """_stream_edges' stream cells as (id, row, col, lbl), pinned, with
+    lbl = the smallest cell id of the cell's LINK: a component of the
+    stream edges left after dropping every edge INTO a junction-fed
+    cell. Releases `streams` (the result carries its columns)."""
+    from .clump import connected_components
+
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("n"))
     chain_e = e.join(indeg.where("n >= 2").select("dst"), "dst", "left_anti")
-    lbl = streams.selectExpr("id", "row", "col", "id AS lbl")
-    both = chain_e.unionByName(chain_e.selectExpr("dst AS src", "src AS dst"))
-
-    def propagate(lbl):
-        nb = both.join(lbl.selectExpr("id AS src", "lbl AS nlbl"), "src") \
-                 .groupBy("dst").agg(F.min("nlbl").alias("mn"))
-        new = lbl.join(nb.withColumnRenamed("dst", "id"), "id", "left") \
-                 .selectExpr("id", "row", "col", "lbl",
-                             "LEAST(lbl, COALESCE(mn, lbl)) AS nl")
-        owners = new.selectExpr("id AS o_id", "nl AS o_lbl")
-        return new.join(owners, new["nl"] == owners["o_id"], "left") \
-                  .selectExpr("id", "row", "col", "lbl AS __prev",
-                              "LEAST(nl, COALESCE(o_lbl, nl)) AS lbl")
-
-    lbl = fixpoint(lbl, propagate, "lbl <> __prev",
-                   "_labeled_links label propagation", 48)
+    comp = connected_components(chain_e.selectExpr("src AS a", "dst AS b"),
+                                "_labeled_links label propagation", 48)
+    lbl, _ = materialize(streams.join(comp, "id", "left").selectExpr(
+        "id", "row", "col", "COALESCE(comp, id) AS lbl"))
     streams.unpersist()
-    return lbl, e
+    return lbl
 
 
 def strahler_order(cells: DataFrame, meta: GridMeta, threshold: float,
@@ -564,7 +559,8 @@ def strahler_order(cells: DataFrame, meta: GridMeta, threshold: float,
     its LINK graph first (stream_link machinery, O(log chain) rounds),
     then topologically peel the link DAG — rounds = junction depth
     (tens), not cell-chain length (thousands)."""
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     # link-level edges: cell edge crossing two different links
     le = (
         e.join(lbl.selectExpr("id AS src", "lbl AS src_l"), "src")
@@ -623,7 +619,8 @@ def stream_link_id(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFr
     remaining chains, number links by row-major representative."""
     from ..plans.rank import dense_rank_small
 
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     reps = dense_rank_small(lbl, "lbl", "link_id")
     out = lbl.join(reps, "lbl").selectExpr("row", "col", "CAST(link_id AS DOUBLE) AS value")
     e.unpersist()
@@ -1237,7 +1234,8 @@ def shreve_order(cells: DataFrame, meta: GridMeta, threshold: float,
     """ShreveStreamMagnitude: heads are 1; at a junction the magnitude is
     the SUM of inflow magnitudes (constant along links). Same link-DAG
     peel as strahler_order with a sum combiner."""
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     le = (
         e.join(lbl.selectExpr("id AS src", "lbl AS src_l"), "src")
         .join(lbl.selectExpr("id AS dst", "lbl AS dst_l"), "dst")
@@ -1290,7 +1288,8 @@ def stream_link_metrics(cells: DataFrame, meta: GridMeta, threshold: float) -> D
     from ..plans.rank import dense_rank_small
 
     c = meta.columns
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     z = cells.selectExpr(f"(row * {c}L + col) AS id", "value AS z")
     lz = lbl.join(z, "id")
     # in-link edges classified by step kind; the length multiplies the
@@ -1790,32 +1789,27 @@ def stream_link_class(cells: DataFrame, meta: GridMeta,
     1 = other cell of an exterior (head-containing) link, 2 = other cell
     of an interior link. Node codes take precedence (5 > 4 > 3)."""
     streams, e = _stream_edges(cells, meta, threshold)
-    lbl, e_l = _labeled_links(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("n_in"))
     has_out = e.select(F.col("src").alias("id")).distinct() \
                .withColumn("__has_out", F.lit(1))
     node = (
-        streams.join(indeg.withColumnRenamed("dst", "id"), "id", "left")
+        lbl.join(indeg.withColumnRenamed("dst", "id"), "id", "left")
         .join(has_out, "id", "left")
         .selectExpr(
-            "id",
+            "row", "col", "lbl",
             "CASE WHEN __has_out IS NULL THEN 5 "
             "WHEN COALESCE(n_in, 0) >= 2 THEN 4 "
             "WHEN COALESCE(n_in, 0) = 0 THEN 3 ELSE 0 END AS node_kind")
     )
-    heads = node.where("node_kind = 3").select("id")
-    ext = lbl.join(heads, "id", "leftsemi").select(F.col("lbl").alias("xl")).distinct()
-    out = (
-        lbl.join(node, "id")
-        .join(ext, lbl["lbl"] == F.col("xl"), "left")
+    ext = node.where("node_kind = 3").select(F.col("lbl").alias("xl")).distinct()
+    return (
+        node.join(ext, node["lbl"] == F.col("xl"), "left")
         .selectExpr(
             "row", "col",
             "CAST(CASE WHEN node_kind > 0 THEN node_kind "
             "WHEN xl IS NOT NULL THEN 1 ELSE 2 END AS DOUBLE) AS value")
     )
-    streams.unpersist()
-    e_l.unpersist()
-    return out
 
 
 def remove_short_streams(cells: DataFrame, meta: GridMeta, threshold: float,
@@ -1824,7 +1818,8 @@ def remove_short_streams(cells: DataFrame, meta: GridMeta, threshold: float,
     along-link length is below min_length; remaining stream cells emit
     1.0."""
     c = meta.columns
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("n_in"))
     heads = lbl.join(indeg.withColumnRenamed("dst", "id"), "id", "left") \
                .where("COALESCE(n_in, 0) = 0").select("id")
@@ -1866,7 +1861,8 @@ def hack_order(cells: DataFrame, meta: GridMeta, threshold: float,
     increments. Link-DAG top-down propagation; rounds = link depth."""
     from ..plans.rank import dense_rank_small  # noqa: F401 (parity w/ siblings)
 
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     reach, streams, e2 = _stream_closure(cells, meta, threshold)
     # upstream channel length per cell = farthest head distance
     heads = streams.join(e2.select(F.col("dst").alias("id")).distinct(),
@@ -1922,7 +1918,8 @@ def horton_order(cells: DataFrame, meta: GridMeta, threshold: float,
     on order resolve by greater upstream length then smaller label);
     all other inflows start a new stream with their own Strahler
     order."""
-    lbl, e = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     strahler_cells = strahler_order(cells, meta, threshold)
     c = meta.columns
     str_lbl = lbl.join(
@@ -2040,7 +2037,8 @@ def subbasins(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
 
     c = meta.columns
     walk = _walk_to_stream(cells, meta, threshold)
-    lbl, e_l = _labeled_links(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
     reps = dense_rank_small(lbl, "lbl", "link_id")
     link_of = lbl.join(reps, "lbl").selectExpr("id AS term", "link_id")
     out = (
@@ -2049,7 +2047,7 @@ def subbasins(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
         .join(link_of, "term")
         .selectExpr("row", "col", "CAST(link_id AS DOUBLE) AS value")
     )
-    e_l.unpersist()
+    e.unpersist()
     return out
 
 
@@ -2078,9 +2076,10 @@ def hillslopes(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
 
     c = meta.columns
     ptr = d8_pointer(cells, meta).persist()
-    accum = d8_flow_accumulation_tiled(cells, meta)
-    streams = accum.where(f"value >= {threshold!r}") \
-                   .selectExpr(f"(row * {c}L + col) AS sid").persist()
+    streams, e = _stream_edges(cells, meta, threshold)
+    lbl = _labeled_links(streams, e)
+    e.unpersist()
+    streams = lbl.selectExpr("id AS sid")
     e_all = d8_edges(ptr).selectExpr(
         f"(row * {c}L + col) AS id", f"(drow * {c}L + dcol) AS nxt")
     # walk graph: both endpoints off-stream
@@ -2107,7 +2106,6 @@ def hillslopes(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
     s_dir = ptr.selectExpr(f"(row * {c}L + col) AS s_id",
                            f"CASE WHEN value > 0 THEN {dir_expr} ELSE -1 END AS d_out") \
                .join(streams.selectExpr("sid AS s_id"), "s_id", "leftsemi")
-    lbl, e_l = _labeled_links(cells, meta, threshold)
     reps = dense_rank_small(lbl, "lbl", "link_id")
     link_of = lbl.join(reps, "lbl").selectExpr("id AS s_id", "link_id")
     hs = (
@@ -2123,8 +2121,6 @@ def hillslopes(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
     zeros = lbl.selectExpr("row", "col", "0.0 AS value")
     out = hs.unionByName(zeros)
     ptr.unpersist()
-    streams.unpersist()
-    e_l.unpersist()
     return out
 
 

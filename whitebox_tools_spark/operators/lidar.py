@@ -229,13 +229,14 @@ def lidar_segmentation(points: DataFrame, radius: float = 2.0,
     """Plane-normal region growing (lidar_segmentation.rs semantics):
     per-point normals from the local PCA plane fit, then connected
     components over neighbor pairs whose normals differ < norm_diff
-    degrees AND |dz| <= maxzdiff — min-label propagation with pointer
-    jumping (the clump machinery shape). Output (id, segment_id 1..K,
-    numbered by each segment's smallest point id)."""
+    degrees AND |dz| <= maxzdiff (clump.connected_components). Output
+    (id, segment_id 1..K, numbered by each segment's smallest point
+    id)."""
     import math
 
-    from ..plans.iterate import ensure_converged
+    from ..plans.iterate import materialize
     from ..plans.rank import dense_rank_small
+    from .clump import connected_components
 
     pairs = _neighbor_pairs(points, radius, id_col=id_col, z=z) \
         .localCheckpoint(eager=True)
@@ -251,40 +252,14 @@ def lidar_segmentation(points: DataFrame, radius: float = 2.0,
         .join(nrm.selectExpr("pid AS b_id", "nx AS bnx", "ny AS bny", "nz AS bnz"), "b_id")
         .where(f"ABS(az - bz) <= {maxzdiff!r} AND "
                f"ABS(anx * bnx + any_ * bny + anz * bnz) >= {cos_t!r}")
-        .select("a_id", "b_id")
+        .selectExpr("a_id AS a", "b_id AS b")
     )
-    lbl = points.selectExpr(f"{id_col} AS pid", f"{id_col} AS lbl") \
-                .localCheckpoint(eager=True)
-    # pin the edge list once — it is the pairs x normals x normals join
-    # and would otherwise re-execute every propagation round
-    both = e.unionByName(e.selectExpr("b_id AS a_id", "a_id AS b_id")) \
-            .localCheckpoint(eager=True)
-    # frontier scatter (the clump discipline): a node's min-label can
-    # only improve via a neighbor whose label changed last round, so
-    # only changed nodes scatter; pointer jumping every third round
-    # bounds rounds at O(log diameter) for chain-shaped segments
-    frontier = lbl
-    for round_no in range(max_rounds):
-        nb = both.join(frontier.selectExpr("pid AS a_id", "lbl AS nlbl"),
-                       "a_id") \
-                 .groupBy("b_id").agg(F.min("nlbl").alias("mn"))
-        new = lbl.join(nb.withColumnRenamed("b_id", "pid"), "pid", "left") \
-                 .selectExpr("pid", "lbl AS __prev",
-                             "LEAST(lbl, COALESCE(mn, lbl)) AS nl")
-        if round_no % 3 == 2:
-            owners = new.selectExpr("pid AS o_id", "nl AS o_lbl")
-            new = new.join(owners, new["nl"] == owners["o_id"], "left") \
-                     .selectExpr("pid", "__prev",
-                                 "LEAST(nl, COALESCE(o_lbl, nl)) AS nl")
-        new = new.selectExpr("pid", "__prev", "nl AS lbl") \
-                 .localCheckpoint(eager=True)
-        frontier = new.where("lbl <> __prev").select("pid", "lbl")
-        changed = frontier.count()
-        lbl = new.select("pid", "lbl")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "lidar_segmentation label propagation", max_rounds)
+    comp = connected_components(e, "lidar_segmentation label propagation",
+                                max_rounds)
+    lbl, _ = materialize(
+        points.selectExpr(f"{id_col} AS pid")
+        .join(comp.withColumnRenamed("id", "pid"), "pid", "left")
+        .selectExpr("pid", "COALESCE(comp, pid) AS lbl"))
     reps = dense_rank_small(lbl, "lbl", "segment_id")
     return lbl.join(reps, "lbl").selectExpr(f"pid AS {id_col}",
                                             "CAST(segment_id AS BIGINT) AS segment_id")

@@ -13,8 +13,8 @@ Spark plan:
 2. segment splitting at its ordered intersection params — pure SQL
    (collect_list + array_sort + transform + explode), no Python;
 3. node quantization + connected components over the edge graph —
-   clump-style min-label propagation (one scatter join per round,
-   O(diameter) rounds);
+   clump.connected_components on STRUCT(kx, ky) node ids (frontier
+   scatter + pointer jumping, O(log diameter) rounds on rings);
 4. face tracing per component — cogrouped applyInPandas: directed
    half-edges sorted by angle at each node, next(u->v) = clockwise-most
    edge at v after (v->u); bounded (CCW, positive-area) faces survive.
@@ -26,15 +26,14 @@ from __future__ import annotations
 
 import math
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (DoubleType, IntegerType, LongType, StructField,
                                StructType)
 
+from .clump import connected_components
 from .vector_ops import line_intersections
-from .hydro import ensure_converged
 
 # face key = (min quantized node, its ring successor): distinct faces
 # around the same min node leave it via distinct half-edges, so the pair
@@ -86,57 +85,6 @@ def _quant(expr: str, q: float) -> str:
     return f"CAST(ROUND(({expr}) / {q!r}) AS BIGINT)"
 
 
-def _connected_components(edges: DataFrame, max_rounds: int = 64) -> DataFrame:
-    """Min-label propagation over an undirected (akx, aky, bkx, bky)
-    edge list; returns (kx, ky, comp) per node. Label domain = quantized
-    node keys packed to one int64-ish pair; comp = lexicographic min
-    reachable (kx, ky)."""
-    und = edges.selectExpr("akx AS kx", "aky AS ky", "bkx AS nkx", "bky AS nky") \
-        .unionByName(edges.selectExpr("bkx AS kx", "bky AS ky",
-                                      "akx AS nkx", "aky AS nky")).distinct() \
-        .localCheckpoint(eager=True)
-    lab = und.selectExpr("kx", "ky").distinct() \
-        .selectExpr("kx", "ky", "kx AS cx", "ky AS cy") \
-        .localCheckpoint(eager=True)
-    # frontier scatter + pointer jumping every third round: ring
-    # arrangements are path graphs, where plain propagation needs
-    # O(ring length) rounds — jumping bounds it at O(log ring length)
-    frontier = lab
-    for round_no in range(max_rounds):
-        nbr = und.join(frontier.selectExpr("kx AS nkx", "ky AS nky",
-                                           "cx AS ncx", "cy AS ncy"),
-                       ["nkx", "nky"]) \
-            .groupBy("kx", "ky").agg(
-                F.expr("MIN(STRUCT(ncx, ncy))").alias("nb"))
-        new = lab.join(nbr, ["kx", "ky"], "left").selectExpr(
-            "kx", "ky", "cx AS px", "cy AS py",
-            "CASE WHEN nb IS NOT NULL AND STRUCT(nb.ncx AS cx, nb.ncy AS cy) "
-            "< STRUCT(cx, cy) THEN nb.ncx ELSE cx END AS cx",
-            "CASE WHEN nb IS NOT NULL AND STRUCT(nb.ncx AS cx, nb.ncy AS cy) "
-            "< STRUCT(cx, cy) THEN nb.ncy ELSE cy END AS cy",
-        )
-        if round_no % 3 == 2:
-            owners = new.selectExpr("kx AS cx", "ky AS cy",
-                                    "cx AS ocx", "cy AS ocy")
-            new = new.join(owners, ["cx", "cy"], "left").selectExpr(
-                "kx", "ky", "px", "py",
-                "CASE WHEN ocx IS NOT NULL AND STRUCT(ocx AS cx, ocy AS cy) "
-                "< STRUCT(cx, cy) THEN ocx ELSE cx END AS cx",
-                "CASE WHEN ocx IS NOT NULL AND STRUCT(ocx AS cx, ocy AS cy) "
-                "< STRUCT(cx, cy) THEN ocy ELSE cy END AS cy",
-            )
-        new = new.localCheckpoint(eager=True)
-        frontier = new.where("cx <> px OR cy <> py") \
-                      .selectExpr("kx", "ky", "cx", "cy")
-        changed = frontier.count()
-        lab = new.drop("px", "py")
-        if changed == 0:
-            break
-    else:
-        ensure_converged(changed, "polygonize components", max_rounds)
-    return lab.selectExpr("kx", "ky", "cx", "cy")
-
-
 def polygonize(segs: DataFrame, quant: float = 1e-9) -> DataFrame:
     """Polygonize (gis_analysis/polygonize.rs semantics, see module doc).
 
@@ -165,8 +113,12 @@ def polygonize(segs: DataFrame, quant: float = 1e-9) -> DataFrame:
     # the noded arrangement anchors the CC loop and the trace — pin it
     # so neither replays the O(n^2)-candidate intersection join
     e = e.localCheckpoint(eager=True)
-    comp = _connected_components(e.select("akx", "aky", "bkx", "bky"))
-    ec = e.join(comp.selectExpr("kx AS akx", "ky AS aky", "cx", "cy"),
+    comp = connected_components(
+        e.selectExpr("STRUCT(akx AS kx, aky AS ky) AS a",
+                     "STRUCT(bkx AS kx, bky AS ky) AS b"),
+        "polygonize components", 64)
+    ec = e.join(comp.selectExpr("id.kx AS akx", "id.ky AS aky",
+                                "comp.kx AS cx", "comp.ky AS cy"),
                 ["akx", "aky"])
 
     def trace(key, pdf: pd.DataFrame) -> pd.DataFrame:

@@ -1049,14 +1049,16 @@ def merge_line_segments(lines: DataFrame, snap: float,
     shape_id = min input id in the merged chain.
 
     Plan: snap endnode clusters (FRS join) -> cluster degrees -> line
-    graph restricted to degree-2 clusters -> min-label propagation ->
-    per-chain vertex assembly in applyInPandas (chains are short; the
+    graph restricted to degree-2 clusters -> clump.connected_components
+    (lines without a link are their own chain) -> per-chain vertex
+    assembly in applyInPandas (chains are short; the
     grouping is the only shuffle)."""
     import pandas as pd
     from pyspark.sql.types import (DoubleType, IntegerType, LongType,
                                    StructField, StructType)
 
     from ..functions.cells import frs_cell_expr
+    from .clump import connected_components
 
     # single-part polylines assumed (the reference merges FEATURES)
     en = _endnodes(lines, id_col)
@@ -1072,25 +1074,14 @@ def merge_line_segments(lines: DataFrame, snap: float,
     )
     link = pairs.alias("l").join(pairs.alias("r"), ["kx", "ky"]).selectExpr(
         "l.a AS a", "r.a AS b").where("a < b")
-    # label propagation over line ids
-    ids = lines.selectExpr(f"{id_col} AS a").distinct()
-    lbl = ids.selectExpr("a AS id", "a AS lbl").localCheckpoint(eager=True)
-    both = link.unionByName(link.selectExpr("b AS a", "a AS b"))
-    for _ in range(max_rounds):
-        nb = both.join(lbl.selectExpr("id AS a", "lbl AS nl"), "a") \
-            .groupBy("b").agg(F.min("nl").alias("mn"))
-        new = lbl.join(nb.withColumnRenamed("b", "id"), "id", "left") \
-            .selectExpr("id", "lbl AS __p", "LEAST(lbl, COALESCE(mn, lbl)) AS lbl") \
-            .localCheckpoint(eager=True)
-        changed = new.where("lbl <> __p").count()
-        lbl = new.select("id", "lbl")
-        if changed == 0:
-            break
+    comp = connected_components(link, "merge_line_segments label propagation",
+                                max_rounds)
     verts = lines.select(id_col, F.explode("parts").alias("p")).selectExpr(
         f"{id_col} AS id",
         "POSEXPLODE(p.ring) AS (vidx, v)",
     ).selectExpr("id", "vidx", "v.x AS x", "v.y AS y")
-    g = verts.join(lbl, "id")
+    g = verts.join(comp, "id", "left").selectExpr(
+        "id", "vidx", "x", "y", "COALESCE(comp, id) AS lbl")
     schema = StructType([
         StructField("shape_id", LongType(), False),
         StructField("vertex_idx", IntegerType(), False),

@@ -15,8 +15,12 @@ the checkpoint, the convergence test and the guard; each logs one DEBUG
 line per round on this module's logger (operator, round, rows, rows
 changed, seconds), from counts that are already observed.
 
-Loops that do not fit either shape (the peel loops) call
-ensure_converged from their for/else clause.
+Every min-label propagation (clump, polygonize, lidar segmentation,
+line merging, stream links, dedup clusters) is one `fixpoint`:
+operators.clump.connected_components, whose step keeps its own round
+counter to pointer-jump every third round. Loops that fit neither shape
+(the link-DAG peel loops of hydro.py) call ensure_converged from their
+for/else clause.
 """
 
 from __future__ import annotations
