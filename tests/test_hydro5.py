@@ -1,6 +1,7 @@
 """Round-3 flow models: rho8 / qin / quinn / mdinf / jenson snap /
 isobasins / unnest basins."""
 
+import logging
 import math
 
 import numpy as np
@@ -207,6 +208,18 @@ def test_unnest_basins_layers(spark, dem):
     # the nested basin (layer 1, outlet 2) contains outlet 1's cell
     l1_cells = {(r, c) for r, c, o in lay[1] if o == 2}
     assert p1 in l1_cells
+
+
+def test_unnest_basins_one_closure(spark, dem, caplog):
+    """A two-layer call builds the watershed closure once."""
+    df, _ = dem
+    pour = _pour_on_path(spark, df)[1]
+    with caplog.at_level(logging.DEBUG, logger="whitebox_tools_spark.plans.iterate"):
+        out = HY.unnest_basins(df, META, pour).collect()
+    assert {r["layer"] for r in out} == {1, 2}
+    starts = [r for r in caplog.records
+              if "watershed closure round 1:" in r.getMessage()]
+    assert len(starts) == 1
 
 
 def test_unnest_basins_budget_exhausted(spark, dem):

@@ -1,7 +1,9 @@
 """kNN join: exact variant vs brute force; WBT variant vs a literal
 numpy transcription of fixed_radius_search.rs knn_search."""
 
+import logging
 import math
+import re
 
 import numpy as np
 import pytest
@@ -69,7 +71,8 @@ def numpy_wbt_knn(qx, qy, tx, ty, k, radius, max_rounds=None):
             for n in range(-1, 2):
                 cand.extend(bins.get((ci + m, cj + n), []))
         shell = 2
-        while len(cand) < k and (max_rounds is None or shell <= max_rounds):
+        # min(k, n): with fewer than k targets the shells would never end
+        while len(cand) < min(k, len(tx)) and (max_rounds is None or shell <= max_rounds):
             for m in range(-shell, shell + 1):
                 for n in range(-shell, shell + 1):
                     if abs(m) == shell or abs(n) == shell:
@@ -119,6 +122,65 @@ def test_wbt_knn_round_budget(spark, layers):
     exp = numpy_wbt_knn(qx, qy, tx, ty, K, RADIUS, max_rounds=1)
     assert any(len(v) < K for v in exp.values())
     assert got == exp
+
+
+def _active_per_round(qx, qy, tx, ty, k, radius, exact, max_rounds):
+    """Numpy recount of the ring loop: queries still active after each
+    round (rounds stop once none is)."""
+    inv_r = 1.0 / (radius * 0.5)
+    b = radius * 0.5
+    tcx = np.array([math.floor(v * inv_r) for v in tx])
+    tcy = np.array([math.floor(v * inv_r) for v in ty])
+    done_at = []
+    for i in range(len(qx)):
+        cheb = np.maximum(abs(tcx - math.floor(qx[i] * inv_r)),
+                          abs(tcy - math.floor(qy[i] * inv_r)))
+        d2 = (qx[i] - tx) ** 2 + (qy[i] - ty) ** 2
+        for reach in range(1, max_rounds + 1):
+            seen = np.sort(d2[cheb <= reach])
+            if len(seen) >= k and (not exact or seen[k - 1] < float(reach * b) ** 2):
+                done_at.append(reach)
+                break
+        else:
+            done_at.append(max_rounds + 1)
+    counts = []
+    for reach in range(1, max_rounds + 1):
+        counts.append(sum(d > reach for d in done_at))
+        if counts[-1] == 0:
+            break
+    return counts
+
+
+@pytest.mark.parametrize("exact", [True, False])
+def test_ring_rounds_logged(spark, layers, caplog, exact):
+    """One DEBUG line per ring round; its count of still-active queries
+    matches a numpy recount of the rounds."""
+    q, t, (qx, qy, tx, ty) = layers
+    join, name = ((knn_join_exact, "knn_join_exact ring") if exact
+                  else (knn_join_wbt, "knn_join_wbt ring"))
+    with caplog.at_level(logging.DEBUG, logger="whitebox_tools_spark.plans.iterate"):
+        join(q, t, k=K, radius=RADIUS, max_rounds=8).collect()
+    lines = [r.getMessage() for r in caplog.records
+             if r.getMessage().startswith(f"{name} round ")]
+    assert [int(re.search(r" round (\d+):", m).group(1)) for m in lines] == \
+        list(range(1, len(lines) + 1))
+    active = [int(re.search(r"changed=(\d+)", m).group(1)) for m in lines]
+    assert active == _active_per_round(qx, qy, tx, ty, K, RADIUS, exact, 8)
+    assert len(active) > 1
+
+
+def test_exact_knn_tie_at_stop_bound(spark):
+    """The stop test is strict. At radius 0.65, x=19.5 bins one cell low
+    (19.5 * (1 / 0.325) rounds below 60), so target 0 at x=26.0 sits in
+    ring 21 at distance 6.5 = 20 * bin_size exactly, while target 1 at
+    x=13.0, same distance, is scanned by round 19. A stop at dist2 <=
+    (20 * bin_size)^2 would return target 1; the (dist2, tid) answer is
+    target 0, found in round 21."""
+    q = spark.createDataFrame([(0, 19.5, 0.0)], "query_id long, x double, y double")
+    t = spark.createDataFrame([(0, 26.0, 0.0), (1, 13.0, 0.0)],
+                              "target_id long, x double, y double")
+    got = _collect(knn_join_exact(q, t, k=1, radius=0.65, max_rounds=24))
+    assert got == {0: [(0, 42.25)]}
 
 
 def test_nn_gridding_against_brute(spark, layers):

@@ -348,3 +348,39 @@ def test_connected_components_matches_union_find(spark, ids, graph):
            (tuple(r["comp"]) if ids == "struct" else r["comp"])
            for r in connected_components(df, "cc property", 32).collect()}
     assert got == _union_find_components([(node(a), node(b)) for a, b in edges])
+
+
+# targets on a 0.5 lattice: distance ties between targets, and k-th
+# distances exactly on the stop bound reach * bin_size (bins 0.5, 1.0,
+# 1.5); queries on the same lattice plus two in an empty region, so
+# rings expand and bins come back empty
+_lattice_pt = st.tuples(_half, _half)
+_knn_input = st.tuples(
+    st.lists(_lattice_pt, min_size=1, max_size=30, unique=True),
+    st.lists(_lattice_pt, min_size=1, max_size=12),
+    st.sampled_from([1.0, 2.0, 3.0]))
+
+
+@settings(max_examples=8, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(_knn_input)
+def test_knn_joins_match_brute_force_and_wbt(spark, knn_input):
+    from test_knn import _collect, brute_knn, numpy_wbt_knn
+
+    from whitebox_tools_spark.operators.knn import knn_join_exact, knn_join_wbt
+
+    tpts, qpts, radius = knn_input
+    qpts = qpts + [(12.0, 12.0), (13.5, 9.5)]
+    tx, ty = (np.array(a, dtype=float) for a in zip(*tpts))
+    qx, qy = (np.array(a, dtype=float) for a in zip(*qpts))
+    t = spark.createDataFrame([(i, float(a), float(b)) for i, (a, b) in enumerate(tpts)],
+                              "target_id long, x double, y double")
+    q = spark.createDataFrame([(i, float(a), float(b)) for i, (a, b) in enumerate(qpts)],
+                              "query_id long, x double, y double")
+
+    for k in (1, 4):
+        assert _collect(knn_join_exact(q, t, k=k, radius=radius)) == \
+            brute_knn(qx, qy, tx, ty, k)
+        # WBT has no brute-force fallback to hide a lost candidate
+        assert _collect(knn_join_wbt(q, t, k=k, radius=radius, max_rounds=12)) == \
+            numpy_wbt_knn(qx, qy, tx, ty, k, radius, max_rounds=12)

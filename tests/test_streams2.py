@@ -104,7 +104,8 @@ def test_total_length(spark, net):
     assert abs(row["total_length"] - exp) < 1e-9
 
 
-@pytest.mark.parametrize("op", ["hillslopes", "stream_link_class"])
+@pytest.mark.parametrize("op", ["hillslopes", "stream_link_class", "hack_order",
+                                "horton_order"])
 def test_stream_graph_accumulated_once(spark, net, caplog, op):
     """The link operators build the stream graph (D8 + tiled
     accumulation) once per call: one coarse-closure round sequence."""

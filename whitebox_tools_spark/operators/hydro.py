@@ -197,11 +197,22 @@ def watershed(cells: DataFrame, meta: GridMeta, outlets: DataFrame,
     upstream outlet shadows any outlet further down); cells draining to
     no outlet get no row. outlets: (outlet_id, row, col).
 
-    Plan: hop-annotated pointer-doubling closure (src, dst, hops), then
+    Plan: hop-annotated pointer-doubling closure (src, dst, h), then
     per-cell argmin(hops) over outlet dsts — O(log longest-path) joins.
-    Every (src, dst) pair of the D8 functional graph has exactly one
-    path, so the closure's (src, dst) dedupe keeps the path's hop count.
     """
+    nodes, reach = _watershed_closure(cells, meta, "watershed closure", max_doublings)
+    res = _first_outlet(nodes, reach, outlets, meta)
+    nodes.unpersist()
+    return res
+
+
+def _watershed_closure(cells: DataFrame, meta: GridMeta, what: str,
+                       max_doublings: int) -> tuple[DataFrame, DataFrame]:
+    """(nodes, reach): the D8 cells as (id, row, col), pinned, and the
+    closure (src, dst, h) of their flow paths, h = hops from src to dst
+    (self rows h = 0). Every (src, dst) pair of the D8 functional graph
+    has exactly one path, so the closure's (src, dst) dedupe keeps the
+    path's hop count."""
     c = meta.columns
     ptr = d8_pointer(cells, meta)
     nodes = ptr.selectExpr(f"(row * {c}L + col) AS id", "row", "col").persist()
@@ -209,16 +220,22 @@ def watershed(cells: DataFrame, meta: GridMeta, outlets: DataFrame,
                                  f"(drow * {c}L + dcol) AS dst", "CAST(1 AS INT) AS h")
     reach = closure(
         nodes.selectExpr("id AS src", "id AS dst", "CAST(0 AS INT) AS h").unionByName(e),
-        "watershed closure", max_doublings, sums=("h",))
+        what, max_doublings, sums=("h",))
+    return nodes, reach
+
+
+def _first_outlet(nodes: DataFrame, reach: DataFrame, outlets: DataFrame,
+                  meta: GridMeta) -> DataFrame:
+    """(row, col, value = outlet_id) for every cell whose flow path in
+    `_watershed_closure`'s `reach` meets an outlet: the nearest one."""
+    c = meta.columns
     out_tbl = outlets.selectExpr(f"(row * {c}L + col) AS dst", "outlet_id")
     hits = reach.join(out_tbl, "dst").groupBy("src").agg(
         F.expr("MIN_BY(outlet_id, STRUCT(h, outlet_id))").alias("outlet_id")
     )
-    res = nodes.join(hits, nodes["id"] == hits["src"]).select(
+    return nodes.join(hits, nodes["id"] == hits["src"]).select(
         "row", "col", F.col("outlet_id").cast("double").alias("value")
     )
-    nodes.unpersist()
-    return res
 
 
 def _pflood_kernel(tile: int, rows: int, cols: int, eps: float = 0.0):
@@ -561,6 +578,16 @@ def strahler_order(cells: DataFrame, meta: GridMeta, threshold: float,
     (tens), not cell-chain length (thousands)."""
     streams, e = _stream_edges(cells, meta, threshold)
     lbl = _labeled_links(streams, e)
+    resolved = _strahler_links(lbl, e, max_rounds)
+    out = lbl.join(resolved.withColumnRenamed("id", "lbl"), "lbl") \
+             .selectExpr("row", "col", "CAST(ord AS DOUBLE) AS value")
+    e.unpersist()
+    return out
+
+
+def _strahler_links(lbl: DataFrame, e: DataFrame, max_rounds: int) -> DataFrame:
+    """Strahler order per link as (id = link label, ord): peels the link
+    DAG of `_labeled_links`' `lbl` over the stream edges `e`."""
     # link-level edges: cell edge crossing two different links
     le = (
         e.join(lbl.selectExpr("id AS src", "lbl AS src_l"), "src")
@@ -605,10 +632,7 @@ def strahler_order(cells: DataFrame, meta: GridMeta, threshold: float,
     else:
         ensure_converged(unresolved.count(), "strahler_order link peel", max_rounds)
     le.unpersist()
-    out = lbl.join(resolved.withColumnRenamed("id", "lbl"), "lbl") \
-             .selectExpr("row", "col", "CAST(ord AS DOUBLE) AS value")
-    e.unpersist()
-    return out
+    return resolved
 
 
 def stream_link_id(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFrame:
@@ -1614,14 +1638,15 @@ def depth_in_sink(cells: DataFrame, meta: GridMeta,
 # ---------------------------------------------------------------------------
 
 
-def _stream_closure(cells: DataFrame, meta: GridMeta, threshold: float,
+def _stream_closure(streams: DataFrame, e: DataFrame, meta: GridMeta,
                     max_doublings: int = 24):
-    """Returns (closure, streams, e2): closure = (src, dst, nr, nc, nd,
-    nb) for every stream cell pair on a directed path (self rows
-    included with zero counts); nb counts edges entering junction-fed
-    cells (= link transitions). e2 = annotated stream edges."""
+    """Over _stream_edges' graph (stream cells `streams` with an `id`
+    column, stream->stream edges `e`), returns (closure, e2): closure =
+    (src, dst, nr, nc, nd, nb) for every stream cell pair on a directed
+    path (self rows included with zero counts); nb counts edges entering
+    junction-fed cells (= link transitions). e2 = annotated stream
+    edges, pinned."""
     c = meta.columns
-    streams, e = _stream_edges(cells, meta, threshold)
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("n_in"))
     e2 = e.join(indeg, "dst").selectExpr(
         "src", "dst",
@@ -1636,7 +1661,7 @@ def _stream_closure(cells: DataFrame, meta: GridMeta, threshold: float,
         streams.selectExpr("id AS src", "id AS dst", "0L AS nr", "0L AS nc",
                            "0L AS nd", "0L AS nb").unionByName(e2),
         "_stream_closure doubling", max_doublings, sums=("nr", "nc", "nd", "nb"))
-    return reach, streams, e2
+    return reach, e2
 
 
 def _len_expr(meta: GridMeta, nr="nr", nc="nc", nd="nd") -> str:
@@ -1662,7 +1687,8 @@ def distance_to_outlet(cells: DataFrame, meta: GridMeta,
                        threshold: float) -> DataFrame:
     """DistanceToOutlet: along-stream distance from each stream cell to
     its network outlet (outlets are 0)."""
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    reach, e2 = _stream_closure(streams, e, meta)
     terminals = streams.join(e2.select(F.col("src").alias("id")).distinct(),
                              "id", "left_anti").selectExpr("id AS t")
     hit = reach.join(terminals, reach["dst"] == F.col("t"))
@@ -1688,7 +1714,8 @@ def length_of_upstream_channels(cells: DataFrame, meta: GridMeta,
     most one out-edge) joined onto the exact-step closure, summed per
     dst; the length expression is applied once to the summed integer
     counts so both engines agree bit-exactly."""
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    reach, e2 = _stream_closure(streams, e, meta)
     own = e2.selectExpr("src AS oid", "nr AS o_nr", "nc AS o_nc", "nd AS o_nd")
     agg = (
         reach.join(own, reach["src"] == F.col("oid"))
@@ -1709,7 +1736,8 @@ def farthest_channel_head(cells: DataFrame, meta: GridMeta,
     """FarthestChannelHead: for each stream cell, the maximum along-
     stream distance from any upstream channel head (heads report 0).
     Ties on exact distance resolve to the smaller head id."""
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    reach, e2 = _stream_closure(streams, e, meta)
     heads = streams.join(e2.select(F.col("dst").alias("id")).distinct(),
                          "id", "left_anti").selectExpr("id AS h")
     hr = reach.join(heads, reach["src"] == F.col("h"))
@@ -1730,7 +1758,8 @@ def tributary_id(cells: DataFrame, meta: GridMeta, threshold: float) -> DataFram
     smaller head id), dense-ranked to 1..N."""
     from ..plans.rank import dense_rank_small
 
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    reach, e2 = _stream_closure(streams, e, meta)
     heads = streams.join(e2.select(F.col("dst").alias("id")).distinct(),
                          "id", "left_anti").selectExpr("id AS h")
     hr = reach.join(heads, reach["src"] == F.col("h"))
@@ -1750,7 +1779,8 @@ def topological_stream_order(cells: DataFrame, meta: GridMeta,
     the order grows toward the heads — per cell, 1 + the number of link
     transitions (edges entering junction-fed cells) on its downstream
     path."""
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    streams, e = _stream_edges(cells, meta, threshold)
+    reach, e2 = _stream_closure(streams, e, meta)
     terminals = streams.join(e2.select(F.col("src").alias("id")).distinct(),
                              "id", "left_anti").selectExpr("id AS t")
     hit = reach.join(terminals, reach["dst"] == F.col("t"))
@@ -1859,14 +1889,12 @@ def hack_order(cells: DataFrame, meta: GridMeta, threshold: float,
     continues the parent's order; exact-length ties resolve to the
     smaller link label): outlet links are 1, each side tributary
     increments. Link-DAG top-down propagation; rounds = link depth."""
-    from ..plans.rank import dense_rank_small  # noqa: F401 (parity w/ siblings)
-
     streams, e = _stream_edges(cells, meta, threshold)
     lbl = _labeled_links(streams, e)
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
+    reach, e2 = _stream_closure(lbl, e, meta)
     # upstream channel length per cell = farthest head distance
-    heads = streams.join(e2.select(F.col("dst").alias("id")).distinct(),
-                         "id", "left_anti").selectExpr("id AS h")
+    heads = lbl.join(e2.select(F.col("dst").alias("id")).distinct(),
+                     "id", "left_anti").selectExpr("id AS h")
     hr = reach.join(heads, reach["src"] == F.col("h"))
     upl = hr.groupBy("dst").agg(
         F.expr(f"MAX({_len_expr(meta)})").alias("up_len")).withColumnRenamed("dst", "id")
@@ -1905,7 +1933,6 @@ def hack_order(cells: DataFrame, meta: GridMeta, threshold: float,
              .selectExpr("row", "col", "CAST(ord AS DOUBLE) AS value")
     le.unpersist()
     e2.unpersist()
-    streams.unpersist()
     e.unpersist()
     return out
 
@@ -1920,14 +1947,12 @@ def horton_order(cells: DataFrame, meta: GridMeta, threshold: float,
     order."""
     streams, e = _stream_edges(cells, meta, threshold)
     lbl = _labeled_links(streams, e)
-    strahler_cells = strahler_order(cells, meta, threshold)
-    c = meta.columns
-    str_lbl = lbl.join(
-        strahler_cells.selectExpr(f"(row * {c}L + col) AS id", "value AS str_ord"),
-        "id").groupBy("lbl").agg(F.max("str_ord").alias("str_ord"))
-    reach, streams, e2 = _stream_closure(cells, meta, threshold)
-    heads = streams.join(e2.select(F.col("dst").alias("id")).distinct(),
-                         "id", "left_anti").selectExpr("id AS h")
+    # Strahler order is constant along a link
+    str_lbl = _strahler_links(lbl, e, max_rounds).selectExpr(
+        "id AS lbl", "CAST(ord AS DOUBLE) AS str_ord")
+    reach, e2 = _stream_closure(lbl, e, meta)
+    heads = lbl.join(e2.select(F.col("dst").alias("id")).distinct(),
+                     "id", "left_anti").selectExpr("id AS h")
     upl = reach.join(heads, reach["src"] == F.col("h")).groupBy("dst").agg(
         F.expr(f"MAX({_len_expr(meta)})").alias("up_len")).withColumnRenamed("dst", "id")
     le = (
@@ -1968,7 +1993,6 @@ def horton_order(cells: DataFrame, meta: GridMeta, threshold: float,
              .selectExpr("row", "col", "CAST(ord AS DOUBLE) AS value")
     le.unpersist()
     e2.unpersist()
-    streams.unpersist()
     e.unpersist()
     return out
 
@@ -3006,30 +3030,14 @@ def unnest_basins(cells: DataFrame, meta: GridMeta, pour: DataFrame,
     reference's non-overlapping rasters and their union is the full
     nested basin set."""
     c = meta.columns
-    ptr = d8_pointer(cells, meta)
-    nodes = ptr.selectExpr(f"(row * {c}L + col) AS id", "row", "col")
-    e = d8_edges(ptr).selectExpr(f"(row * {c}L + col) AS src",
-                                 f"(drow * {c}L + dcol) AS dst")
-    # transitive closure restricted to pour-point destinations: walk the
-    # pour points' downstream paths by pointer doubling over the FULL edge
-    # set, but keep only pour sources (few rows in flight)
+    # one closure for every layer; its rows from pour-point sources are
+    # also the pour points' downstream paths
+    nodes, reach = _watershed_closure(cells, meta, "unnest_basins watershed closure",
+                                      max_doublings)
     pk = pour.selectExpr("outlet_id", f"(row * {c}L + col) AS pid")
-    reach, (prev,) = materialize(pk.selectExpr("pid AS src", "pid AS dst"), "TRUE")
-    hop = e
-    for _ in range(max_doublings):
-        reach, (n,) = materialize(
-            reach.join(hop.selectExpr("src AS dst", "dst AS nxt"), "dst")
-            .selectExpr("src", "nxt AS dst").unionByName(reach).distinct(), "TRUE")
-        grew, prev = n - prev, n
-        if not grew:
-            break
-        hop, _ = materialize(
-            hop.alias("a").join(hop.alias("b"), F.col("a.dst") == F.col("b.src"))
-            .selectExpr("a.src AS src", "b.dst AS dst").distinct())
-    else:
-        ensure_converged(grew, "unnest_basins pour-path doubling", max_doublings)
     # depth = pour points strictly downstream (on the path, not self)
-    down = reach.join(pk.selectExpr("pid AS dst"), "dst", "leftsemi") \
+    down = reach.join(pk.selectExpr("pid AS src"), "src", "leftsemi") \
+        .join(pk.selectExpr("pid AS dst"), "dst", "leftsemi") \
         .where("src <> dst").groupBy("src").count()
     layers = pk.join(down.withColumnRenamed("src", "pid"), "pid", "left") \
         .selectExpr("outlet_id", "pid",
@@ -3039,13 +3047,15 @@ def unnest_basins(cells: DataFrame, meta: GridMeta, pour: DataFrame,
     for lay in sorted(n_layers):
         sub = layers.where(F.col("layer") == lay) \
             .join(pour, "outlet_id").select("outlet_id", "row", "col")
-        w = watershed(cells, meta, sub, max_doublings=max_doublings) \
+        w = _first_outlet(nodes, reach, sub, meta) \
             .selectExpr("row", "col", "CAST(value AS BIGINT) AS outlet_id",
                         f"CAST({lay} AS INT) AS layer")
         outs.append(w)
     from functools import reduce
 
-    return reduce(lambda x, y: x.unionByName(y), outs)
+    res = reduce(lambda x, y: x.unionByName(y), outs)
+    nodes.unpersist()
+    return res
 
 
 # ---------------------------------------------------------------------------

@@ -11,22 +11,28 @@ Two engines:
 
 - ``knn_join_exact`` — same grid machinery but with the correctness
   guarantee: a query finishes at Chebyshev bin reach R only when its
-  k-th candidate distance <= (R * bin_size)^2, since any unscanned bin
-  is at least R*bin_size away. This is the oracle-gated variant
+  k-th candidate distance < (R * bin_size)^2, since any unscanned bin
+  is at least R*bin_size away (strict, so a tie at the bound scans one
+  more ring). This is the oracle-gated variant
   (provably equal to brute force).
 - ``knn_join_wbt`` — replicates the reference's early stop bit-for-bit
   (stop as soon as >= k candidates are seen), for parity with WBT
   fixture outputs.
 
-Both run one ring loop (`_ring_search`). Physical plan per round: probe
-side explodes the ring's neighbor bin keys (codegen), equi-joins the
-build side on (cx, cy) — one int64-key shuffle per round,
-AQE-skew-split; per-query top-k via MIN_BY (k=1) or a window with
-deterministic (dist2, target id) tie-break; two eager checkpoints
-(ranked candidates, active queries), the active count observed on the
-second. Rounds touch only still-active queries, so the joins shrink
-geometrically; at 10^12-doc scale the bin size is chosen from density
-(WBT's own radius heuristic) so that round 1 resolves almost everything.
+Both run one ring loop (`_ring_search`), one eager action per round.
+Physical plan per round: the probe side explodes the ring's neighbor
+bin keys (codegen) and LEFT OUTER equi-joins the pinned targets on
+(cx, cy) (AQE broadcasts them when small), so a query with an empty
+ring keeps a NULL row; the pending candidates of still-active queries
+are unioned in, and one per-query MIN_BY (k=1) or window ranks them by
+(dist2, target id) with NULL candidates last and flags the queries
+whose k-th candidate is inside the stop bound. The ranked frame is
+checkpointed once, with the count of still-active queries observed on
+that same action; resolved rows, pending rows and the next probe are
+filters of it. Rounds touch only still-active queries, so the joins
+shrink geometrically; at 10^12-doc scale the bin size is chosen from
+density (WBT's own radius heuristic) so that round 1 resolves almost
+everything.
 
 Distances are squared (f64, single expression (dx*dx + dy*dy)) — the
 same arithmetic on both Spark and DuckDB, bit-identical.
@@ -35,41 +41,42 @@ same arithmetic on both Spark and DuckDB, bit-identical.
 from __future__ import annotations
 
 import math
+import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.cells import neighbor_offsets, with_frs_cells
-from ..plans.iterate import materialize
+from ..plans.iterate import _log_round, materialize
+
+
+_QCOLS = ("qx", "qy", "qcx", "qcy")
+_DIST2 = "(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)"
 
 
 def _ring_join(
-    queries: DataFrame,
+    probe: DataFrame,
     targets: DataFrame,
     reach: int,
     qid: str,
     tid: str,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Candidate pairs from bins at Chebyshev ring `reach` (ring only,
-    except reach=1 which is the full 3x3 block)."""
+    """Candidate rows from the bins at Chebyshev ring `reach` (ring
+    only, except reach=1 which is the full 3x3 block). A LEFT OUTER
+    join: a bin without targets yields one row with NULL tid / dist2,
+    so every probed query keeps at least one row."""
     offs = neighbor_offsets(reach, ring_only=reach > 1)
     pairs = ", ".join(f"STRUCT(qcx + ({dx}L) AS cx, qcy + ({dy}L) AS cy)" for dx, dy in offs)
-    probe = queries.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).select(
-        qid, "qx", "qy", "qcx", "qcy", F.col("__n.cx").alias("cx"), F.col("__n.cy").alias("cy")
+    bins = probe.withColumn("__n", F.expr(f"EXPLODE(ARRAY({pairs}))")).select(
+        qid, *_QCOLS, F.col("__n.cx").alias("cx"), F.col("__n.cy").alias("cy")
     )
-    cand = probe.join(targets, ["cx", "cy"], "inner")
-    return cand.select(
+    return bins.join(targets, ["cx", "cy"], "left").select(
         qid,
-        "qx",
-        "qy",
-        "qcx",
-        "qcy",
+        *_QCOLS,
         tid,
-        "tx",
-        "ty",
-        F.expr("(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)").alias("dist2"),
+        F.expr(_DIST2).alias("dist2"),
         *carry,
     )
 
@@ -95,22 +102,29 @@ def _prep(
     return q, t
 
 
-def _topk(acc: DataFrame, k: int, qid: str, tid: str,
-          carry: tuple[str, ...]) -> DataFrame:
-    """Per-query k smallest rows of `acc` by (dist2, tid), as (qid, tid,
-    dist2, *carry, knn_rank). k=1 is one hash aggregation (MIN_BY), any
-    other k a window sort; carry columns are payload only and never
-    enter the ordering key."""
+def _rank(acc: DataFrame, k: int, qid: str, tid: str, carry: tuple[str, ...],
+          bound: float) -> DataFrame:
+    """Per-query k smallest rows of `acc` by (dist2, tid), NULL
+    candidates last, with `knn_rank` and the stop flag `__done`: the
+    query's k-th row is a candidate strictly inside `bound`. k=1 is one
+    aggregation (MIN_BY), any other k one window; carry columns are
+    payload only and never enter the ordering key."""
+    def inside(d):  # FALSE, not NULL, for a missing candidate
+        return F.coalesce(d < F.lit(bound), F.lit(False))
+
     if k == 1:
-        val = ", ".join(["dist2", tid, *carry])
-        return acc.groupBy(qid).agg(
-            F.expr(f"MIN_BY(STRUCT({val}), STRUCT(dist2, {tid}))").alias("b")
-        ).selectExpr(qid, f"b.{tid} AS {tid}", "b.dist2 AS dist2",
-                     *[f"b.{c} AS {c}" for c in carry], "1 AS knn_rank")
-    w = Window.partitionBy(qid).orderBy("dist2", tid)
-    return (acc.withColumn("knn_rank", F.row_number().over(w))
-            .where(F.col("knn_rank") <= k)
-            .select(qid, tid, "dist2", *carry, "knn_rank"))
+        val = ", ".join([*_QCOLS, tid, "dist2", *carry])
+        return (acc.groupBy(qid).agg(F.expr(
+            f"MIN_BY(STRUCT({val}), STRUCT(dist2 IS NULL, dist2, {tid}))").alias("b"))
+            .select(qid, "b.*", F.lit(1).alias("knn_rank"))
+            .withColumn("__done", inside(F.col("dist2"))))
+    by_dist = Window.partitionBy(qid).orderBy(
+        F.col("dist2").asc_nulls_last(), F.col(tid).asc_nulls_last())
+    whole = by_dist.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    kth = F.nth_value("dist2", k).over(whole)  # NULL below k candidates
+    return (acc.withColumn("knn_rank", F.row_number().over(by_dist))
+            .withColumn("__done", inside(kth))
+            .where(F.col("knn_rank") <= k))
 
 
 def _ring_search(
@@ -129,55 +143,59 @@ def _ring_search(
     exact: bool,
 ) -> DataFrame:
     """The ring loop behind both joins. Round `reach` scans Chebyshev
-    ring `reach` for the still-active queries, ranks their accumulated
-    candidates, and resolves a query once its k-th candidate lies
-    inside the stop bound: (reach * bin_size)^2 for the exact join, +inf
-    (= has k candidates) for WBT parity. Rounds exhausted: the exact
-    join brute-forces the stragglers, the WBT join keeps their partial
-    top-k."""
+    ring `reach` for the still-active queries, ranks them together with
+    their pending candidates, and resolves a query once its k-th
+    candidate lies inside the stop bound: (reach * bin_size)^2 for the
+    exact join, +inf (= has k candidates) for WBT parity. One eager
+    action per round: the ranked frame is checkpointed and the number of
+    queries still active is observed on it; resolved rows, pending rows
+    and the next probe are filters of that checkpoint. Rounds exhausted:
+    the exact join brute-forces the stragglers, the WBT join keeps their
+    partial top-k."""
     q, t = _prep(queries, targets, radius, qid, tid, qx, qy, tx, ty, carry)
     t = t.persist()
     bin_size = radius * 0.5
-    cols = [qid, tid, "dist2", *carry]
+    what = f"knn_join_{'exact' if exact else 'wbt'} ring"
+    cand_cols = [qid, *_QCOLS, tid, "dist2", *carry]
 
-    active = q.persist()
+    # one partition of queries per core: with the targets broadcast, the
+    # ring join and the per-query rank then run inside the query
+    # partitions, so the candidate rows are never shuffled
+    probe = q.repartition(q.sparkSession.sparkContext.defaultParallelism, qid)
     found: list[DataFrame] = []
-    pending: DataFrame | None = None  # ranked rows of still-active queries
+    pending: DataFrame | None = None  # ranked candidates of still-active queries
     for reach in range(1, max_rounds + 1):
+        t0 = time.perf_counter()
         # rings are disjoint (reach=1 is the full 3x3 block, reach>1
         # strict rings), so no (qid, tid) duplicates across rounds
-        cand = _ring_join(active, t, reach, qid, tid, carry).select(cols)
-        acc = cand if pending is None else pending.select(cols).unionByName(cand)
-        ranked, _ = materialize(_topk(acc, k, qid, tid, carry))
-        # strict <: a target in the first unscanned ring can sit at exactly
-        # reach*bin_size; an equal-distance target with a smaller tid would
-        # then be missed (tie-break contract), so ties force one more ring
+        cand = _ring_join(probe, t, reach, qid, tid, carry)
+        acc = cand if pending is None else pending.select(cand_cols).unionByName(cand)
+        # strict <: FLOOR(x * inv_r) can round a bin edge by an ulp, so a
+        # target in the first unscanned ring can sit at exactly
+        # reach*bin_size (test_exact_knn_tie_at_stop_bound); an
+        # equal-distance target with a smaller tid would then be missed
+        # (tie-break contract), so ties force one more ring
         bound = float(reach * bin_size) ** 2 if exact else math.inf
-        resolved = ranked.where(
-            (F.col("knn_rank") == k) & (F.col("dist2") < F.lit(bound))
-        ).select(qid)
-        found.append(ranked.join(resolved, qid, "left_semi"))
-        pending = ranked.join(resolved, qid, "left_anti")
-        active, (n_active,) = materialize(active.join(resolved, qid, "left_anti"), "TRUE")
+        ranked, (rows, n_active) = materialize(
+            _rank(acc, k, qid, tid, carry, bound), "TRUE", "knn_rank = 1 AND NOT __done")
+        _log_round(what, reach, rows, n_active, t0)
+        found.append(ranked.where("__done"))
+        pending = ranked.where(~F.col("__done") & F.col(tid).isNotNull())
+        probe = ranked.where("knn_rank = 1 AND NOT __done").select(qid, *_QCOLS)
         if n_active == 0:
             break
     else:
         if exact:
             # brute force (tiny set); the cross join re-scans every ring,
             # so the pending rows are a subset of these candidates
-            cand = active.crossJoin(t.drop("cx", "cy")).select(
-                qid,
-                F.col(tid),
-                F.expr("(qx - tx) * (qx - tx) + (qy - ty) * (qy - ty)").alias("dist2"),
-                *carry,
-            )
-            found.append(_topk(cand, k, qid, tid, carry))
+            cand = probe.crossJoin(t.drop("cx", "cy")).select(
+                qid, *_QCOLS, tid, F.expr(_DIST2).alias("dist2"), *carry)
+            found.append(_rank(cand, k, qid, tid, carry, math.inf))
         else:
             found.append(pending)
 
     t.unpersist()
-    q.unpersist()
-    return reduce(DataFrame.unionByName, found).select(*cols, "knn_rank")
+    return reduce(DataFrame.unionByName, found).select(qid, tid, "dist2", *carry, "knn_rank")
 
 
 def knn_join_exact(
